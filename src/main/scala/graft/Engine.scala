@@ -1,9 +1,12 @@
 package graft
 
 import graft.sources.Turtle
-import graft.sparql.{BgpPlanner, Sparql}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sparql.{BgpPlanner, LocalBgp, Sparql}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The query client — Spark-native equivalent of the reference `Client`
   * (reference: mortar-parquet-client/client.py:14-109).
@@ -17,19 +20,46 @@ import org.apache.spark.sql.functions._
   * graphs → set of stream UUIDs → pushed-down Parquet scan
   * (`uuid IN (...) AND time BETWEEN ...`) — reference: client.py:65-72.
   *
-  * Scale design: the UUID set is collected to the driver and inlined as an
-  * IN-list literal — a deliberate choice (matching the reference) because it
-  * enables STATIC partition pruning: the scan never lists, opens or reads a
-  * single file of a non-matching stream, which is what makes the pattern
-  * survive a 100 TB store. Only when the id set grows beyond
-  * `inListThreshold` do we fall back to a broadcast left-semi join (dynamic
-  * partition pruning handles the rest). The fact table is never collected.
+  * Scale design. The graph is building metadata, small next to the fact
+  * table, so the first level runs on the driver whenever it can: on first
+  * use the engine collects the quads into a driver-resident index
+  * (per-predicate forward and reverse adjacency for the union graph and
+  * each named graph, [[graft.sparql.LocalBgp]]) — but only when the graph
+  * holds at most `Closure.DriverSideLimit` (200,000) quads, the same
+  * cutoff that keeps closures on the driver, because the index holds the
+  * whole graph in driver memory. A count of the cached quads decides
+  * before any row is shipped, so a graph over the cutoff pays one count. Conjunctive queries (a SELECT whose WHERE
+  * is only triple patterns and property paths) are then answered from the
+  * index in-process, like the reference's oxigraph store, and no Spark job
+  * runs between the query and the scan. Every other construct, a graph
+  * over the cutoff, or an evaluation whose intermediate solutions pass
+  * `Closure.ClosureRowLimit` plans through [[BgpPlanner]] as a Catalyst
+  * plan over the cached quads. The real Mortar graphs (45 sites with the
+  * Brick ontology merged into every named graph) exceed the cutoff and
+  * take that Spark path.
+  *
+  * The UUID set is then inlined as an IN-list literal — a deliberate
+  * choice (matching the reference) because it enables STATIC partition
+  * pruning: the scan never lists, opens or reads a single file of a
+  * non-matching stream, which is what makes the pattern survive a 100 TB
+  * store. Only when the id set grows beyond `inListThreshold` do we fall
+  * back to a broadcast left-semi join (dynamic partition pruning handles
+  * the rest). The fact table is never collected.
   */
 final class Engine(
     val spark: SparkSession,
     val quads: DataFrame,
     val fact: DataFrame,
     inListThreshold: Int = 100000) {
+
+  /** Union-of-graphs triples, deduped once and cached: every BGP atom of
+    * every un-scoped planned query re-reads this relation. */
+  private lazy val unionTriples: DataFrame =
+    quads.select("s", "p", "o").distinct().cache()
+
+  /** The graph on the driver, built on first use; None when the graph is
+    * over the cutoff and every query plans through BgpPlanner. */
+  private lazy val graphIndex: Option[LocalBgp.Index] = LocalBgp.Index.build(quads)
 
   /** Run a SPARQL-subset query. With `sites`, each site's named graph
     * `urn:{site}#` is queried separately and results are concatenated with a
@@ -38,21 +68,44 @@ final class Engine(
     *
     * Every result column is a string — the reference stringifies every RDF
     * term (client.py:43,53). */
-  /** Union-of-graphs triples, deduped once and cached: every BGP atom of
-    * every un-scoped query re-reads this relation. */
-  private lazy val unionTriples: DataFrame =
-    quads.select("s", "p", "o").distinct().cache()
-
   def sparql(query: String, sites: Seq[String] = Nil): DataFrame = {
     val q = Sparql.parse(query)
-    // quads threaded alongside the cached union relation so the GRAPH
-    // keyword can re-scope mid-query (round 9)
-    if (sites.isEmpty) BgpPlanner.evaluateTriples(unionTriples, q, Some(quads))
-    else sites.map { site =>
+    resolveLocally(q, sites) match {
+      case Some((cols, rows)) =>
+        spark.createDataFrame(rows.map(r => Row.fromSeq(r.toSeq)).asJava,
+          StructType(cols.map(StructField(_, StringType))))
+      case None => plan(q, sites)
+    }
+  }
+
+  private def plan(q: Sparql.Query, sites: Seq[String]): DataFrame =
+    if (sites.isEmpty) {
+      // FROM / FROM NAMED build their own default graph from the quads
+      if (q.fromGraphs.nonEmpty || q.fromNamed.nonEmpty) BgpPlanner.evaluate(quads, q)
+      // quads threaded alongside the cached union relation so the GRAPH
+      // keyword can re-scope mid-query
+      else BgpPlanner.evaluateTriples(unionTriples, q, Some(quads))
+    } else sites.map { site =>
       BgpPlanner.evaluate(quads, q, Some(s"urn:$site#"))
         .withColumn("site", lit(site))
     }.reduce(_.unionByName(_))
-  }
+
+  /** Columns and rows of `q` from the driver-resident index, shaped as
+    * [[plan]]'s result; None when the query, the graph or the evaluation
+    * is outside what the index answers. */
+  private def resolveLocally(q: Sparql.Query,
+      sites: Seq[String]): Option[(Seq[String], Seq[Array[String]])] =
+    // a projected ?site would be overwritten by the planner's site column
+    if (!LocalBgp.supports(q) || (sites.nonEmpty && q.selected.contains("site"))) None
+    else graphIndex.flatMap { index =>
+      if (sites.isEmpty) LocalBgp.evaluate(index.union, q).map((q.selected, _))
+      else {
+        val perSite = sites.map(site =>
+          LocalBgp.evaluate(index.graph(s"urn:$site#"), q).map(_.map(_ :+ site)))
+        if (perSite.exists(_.isEmpty)) None
+        else Some((q.selected :+ "site", perSite.flatMap(_.get)))
+      }
+    }
 
   /** Time-series data for an explicit set of stream ids (the reference's
     * TODO'd "id -> data" method, client.py:13). */
@@ -84,14 +137,21 @@ final class Engine(
       start: String = Engine.DefaultStart,
       end: String = Engine.DefaultEnd,
       limit: Long = -1L): DataFrame = {
-    val res = sparql(query, sites)
-    val bindingCols = res.columns.filterNot(_ == "site")
-    val ids = res
-      .select(explode(array(bindingCols.map(c => col(c).cast("string")): _*)).as("id"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .toSeq
+    val q = Sparql.parse(query)
+    val ids = resolveLocally(q, sites) match {
+      case Some((cols, rows)) =>
+        val binding = cols.indices.filterNot(cols(_) == "site")
+        rows.iterator.flatMap(r => binding.map(r(_))).distinct.toSeq
+      case None =>
+        val res = plan(q, sites)
+        val bindingCols = res.columns.filterNot(_ == "site")
+        res
+          .select(explode(array(bindingCols.map(c => col(c).cast("string")): _*)).as("id"))
+          .distinct()
+          .collect()
+          .map(_.getString(0))
+          .toSeq
+    }
     val df = data(ids, start, end)
     if (limit >= 0) df.limit(math.min(limit, Int.MaxValue.toLong).toInt) else df
   }
@@ -126,8 +186,7 @@ final class Engine(
       sites: Seq[String] = Nil,
       start: String = Engine.DefaultStart,
       end: String = Engine.DefaultEnd,
-      batchRows: Int = 10000): Iterator[Seq[org.apache.spark.sql.Row]] = {
-    import scala.jdk.CollectionConverters._
+      batchRows: Int = 10000): Iterator[Seq[Row]] = {
     dataSparql(query, sites, start, end)
       .toLocalIterator().asScala.grouped(batchRows)
   }

@@ -101,17 +101,23 @@ object Flagship {
       require(full == n, s"ingest wrote $full rows, source had $n")
       full
     } else {
-      // spot-check: one stream must read back non-empty. Read the stream
-      // DIRECTORY directly (round 19): `read.parquet(factRoot)` triggers
-      // partition discovery — a driver-side listing of ALL ~|streams|
-      // partition dirs (~3 s at 1500 dirs, O(store) at scale) — before
-      // any pruning applies; the single-dir read lists one directory.
-      val probe = spark.read.parquet(
-          s"$factRoot/collection=bench/uuid=${uuidOf(5)}")
-        .limit(1).count()
-      require(probe > 0, "ingest spot-check: pruned stream readback was empty")
+      spotCheck(spark, factRoot)
       n
     }
+  }
+
+  /** Ingest's cheap readability check: one stream must read back
+    * non-empty. It reads the stream DIRECTORY directly:
+    * `read.parquet(factRoot)` triggers partition discovery — a
+    * driver-side listing of ALL ~|streams| partition dirs (~3 s at 1500
+    * dirs, O(store) at scale) — before any pruning applies; the
+    * single-dir read lists one directory. */
+  private[graft] def spotCheck(spark: SparkSession, factRoot: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"$factRoot/collection=bench/uuid=${uuidOf(5)}")
+    require(dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir),
+      s"ingest spot-check: stream directory $dir is missing")
+    val probe = spark.read.parquet(dir.toString).limit(1).count()
+    require(probe > 0, "ingest spot-check: pruned stream readback was empty")
   }
 
   /** Emit 3 site graphs (streams striped by uid % 3) + the ontology. */

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,6 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object Closure {
 
+  /** Edge count up to which a closure runs on the driver. `Engine` reuses
+    * it as the quad count up to which it keeps the whole graph in a
+    * driver-resident index ([[graft.sparql.LocalBgp]]). */
   val DriverSideLimit = 200000L
 
   /** Hard cap on CLOSURE rows the driver-side strategy may materialize.
@@ -44,38 +48,61 @@ object Closure {
       driverSideLimit: Long = DriverSideLimit,
       closureRowLimit: Long = ClosureRowLimit): DataFrame = {
     val spark = edges.sparkSession
-    // materialize ONCE: the strategy-choice count, the BFS collect or every
-    // fixpoint round all reuse `e` — without the checkpoint each reuse
-    // would re-derive the whole upstream plan (scans included)
+    import spark.implicits._
     val e = edges.select(col("src").cast("string"), col("dst").cast("string"))
-      .distinct().localCheckpoint()
-    val edgeCount = e.count()
-    if (edgeCount == 0) e
+      .distinct()
+    val (pairs, edgeCount) = counted(e)
+    if (edgeCount == 0) Seq.empty[(String, String)].toDF("src", "dst")
     else if (edgeCount <= driverSideLimit)
-      driverSide(spark, e, closureRowLimit).getOrElse(distributed(e, maxIter))
-    else distributed(e, maxIter)
+      driverSide(spark, pairs.collect(), closureRowLimit)
+        .getOrElse(distributed(pairs.toDF("src", "dst"), maxIter))
+    else distributed(pairs.toDF("src", "dst"), maxIter)
+  }
+
+  /** The pairs of an (src, dst) relation as one RDD, and their count.
+    * The count picks the strategy without shipping a pair to the driver;
+    * the driver-side collect or the fixpoint's first checkpoint then read
+    * the relation's shuffle output instead of re-running its upstream
+    * plan, and nothing is pinned. The RDD also sheds the upstream plan's
+    * constraints, which Spark 4.1 carries into checkpoints and then fails
+    * to map in the fixpoint's unions ("key not found: src#…"). */
+  private def counted(e: DataFrame): (RDD[(String, String)], Long) = {
+    import e.sparkSession.implicits._
+    val pairs = e.as[(String, String)].rdd
+    (pairs, pairs.count())
+  }
+
+  private def adjacency(edges: Array[(String, String)]): Map[String, Seq[String]] =
+    edges.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2).toSeq) }
+
+  /** Nodes reachable from `start` in one or more steps of `next` — `start`
+    * itself only when a cycle leads back to it. The one driver-side BFS
+    * behind both closure strategies here and the in-memory SPARQL
+    * evaluator ([[graft.sparql.LocalBgp]]). */
+  def reachable(start: String,
+      next: String => Iterable[String]): scala.collection.mutable.Set[String] = {
+    val seen = scala.collection.mutable.LinkedHashSet[String]()
+    val queue = scala.collection.mutable.Queue[String]()
+    def visit(n: String): Unit = if (seen.add(n)) queue += n
+    next(start).foreach(visit)
+    while (queue.nonEmpty) next(queue.dequeue()).foreach(visit)
+    seen
   }
 
   /** Exact BFS closure on the driver; None if the closure grows past
     * `rowLimit` (caller falls back to the distributed fixpoint). */
-  private def driverSide(
-      spark: SparkSession, e: DataFrame, rowLimit: Long): Option[DataFrame] = {
+  private def driverSide(spark: SparkSession, edges: Array[(String, String)],
+      rowLimit: Long): Option[DataFrame] = {
     import spark.implicits._
-    val adj = e.as[(String, String)].collect()
-      .groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2).toSet) }
+    val adj = adjacency(edges)
+    val next = (n: String) => adj.getOrElse(n, Nil)
     val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
     for (start <- adj.keys) {
-      val seen = scala.collection.mutable.Set[String]()
-      var frontier = adj(start)
-      while (frontier.nonEmpty) {
-        val next = frontier.diff(seen)
-        seen ++= next
-        frontier = next.flatMap(adj.getOrElse(_, Set.empty[String]))
-      }
+      val seen = reachable(start, next)
       if (out.length + seen.size > rowLimit) return None
       seen.foreach(d => out += ((start, d)))
     }
-    Some(spark.createDataFrame(out.toSeq).toDF("src", "dst"))
+    Some(out.toSeq.toDF("src", "dst"))
   }
 
   private def distributed(e: DataFrame, maxIter: Int): DataFrame = {
@@ -150,34 +177,28 @@ object Closure {
       edges: DataFrame, start: String, reverse: Boolean = false,
       maxIter: Int = 50, driverSideLimit: Long = DriverSideLimit): DataFrame = {
     val spark = edges.sparkSession
+    import spark.implicits._
     import org.apache.spark.sql.functions.{col => c}
     val e0 = edges.select(c("src").cast("string"), c("dst").cast("string")).distinct()
-    val e = (if (reverse) e0.select(c("dst").as("src"), c("src").as("dst")) else e0)
-      .localCheckpoint()
-    if (e.count() <= driverSideLimit) {
-      import spark.implicits._
-      val adj = e.as[(String, String)].collect()
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-      val seen = scala.collection.mutable.Set[String]()
-      var frontier = adj.getOrElse(start, Set.empty[String])
-      while (frontier.nonEmpty) {
-        val fresh = frontier.diff(seen)
-        seen ++= fresh
-        frontier = fresh.flatMap(adj.getOrElse(_, Set.empty[String]))
-      }
-      seen.toSeq.toDF("node")
+    val e = if (reverse) e0.select(c("dst").as("src"), c("src").as("dst")) else e0
+    val (pairs, edgeCount) = counted(e)
+    if (edgeCount <= driverSideLimit) {
+      val adj = adjacency(pairs.collect())
+      reachable(start, adj.getOrElse(_, Nil)).toSeq.toDF("node")
     } else {
+      // every round re-joins the edge set: materialize it once
+      val ec = pairs.toDF("src", "dst").localCheckpoint()
       // seed with start's direct successors (NOT start itself — start only
       // belongs in the result if a cycle brings it back)
-      var seen = e.filter(c("src") === start).select(c("dst").as("node"))
+      var seen = ec.filter(c("src") === start).select(c("dst").as("node"))
         .distinct().localCheckpoint()
       var frontier = seen
       var iter = 0
       var growing = !frontier.isEmpty
       while (growing && iter < maxIter) {
         iter += 1
-        val next = frontier.join(e, frontier("node") === e("src"))
-          .select(e("dst").as("node")).distinct()
+        val next = frontier.join(ec, frontier("node") === ec("src"))
+          .select(ec("dst").as("node")).distinct()
           .join(seen, Seq("node"), "left_anti").localCheckpoint()
         if (next.isEmpty) growing = false
         else { seen = seen.union(next).localCheckpoint(); frontier = next }

@@ -31,11 +31,26 @@ object BgpPlanner {
 
   import Sparql._
 
-  private final case class Atom(s: Term, step: Step, o: Term) {
+  /** One single-step triple pattern: a property path after expansion. */
+  private[sparql] final case class Atom(s: Term, step: Step, o: Term) {
     def vars: Seq[String] =
       Seq(s, o).collect { case V(n) => n } ++ step.varName
     def constCount: Int = Seq(s, o).count { case V(_) => false; case _ => true }
   }
+
+  /** Expand property paths into single-step atoms: a sequence `p1/p2`
+    * joins its steps through a variable from `fresh`. */
+  private[sparql] def expandAtoms(patterns: List[TriplePattern],
+      fresh: () => Term): List[Atom] =
+    patterns.flatMap { tp =>
+      var subj: Term = tp.s
+      tp.path.zipWithIndex.map { case (step, i) =>
+        val obj = if (i == tp.path.length - 1) tp.o else fresh()
+        val a = Atom(subj, step, obj)
+        subj = obj
+        a
+      }
+    }
 
   /** Internal column name for a variable (avoids collision with the quads
     * table's own `s`/`p`/`o`/`graph` columns). */
@@ -117,18 +132,9 @@ object BgpPlanner {
     var pathCounter = 0
     def freshPathVar(): Term = { pathCounter += 1; V(s"_path$pathCounter") }
 
-    // Expand property paths into single-step atoms with fresh join vars.
-    def expandAtoms(patterns: List[TriplePattern]): List[Atom] =
-      patterns.flatMap { tp =>
-        var subj: Term = tp.s
-        tp.path.zipWithIndex.map { case (step, i) =>
-          val obj = if (i == tp.path.length - 1) tp.o else freshPathVar()
-          val a = Atom(subj, step, obj)
-          subj = obj
-          a
-        }
-      }
-    val atoms: List[Atom] = expandAtoms(q.patterns)
+    def atomsOf(patterns: List[TriplePattern]): List[Atom] =
+      expandAtoms(patterns, () => freshPathVar())
+    val atoms: List[Atom] = atomsOf(q.patterns)
 
     /** Single-step edge relation of an alternative set: union of one
       * predicate-filtered scan per alternative, direction swapped for
@@ -420,7 +426,7 @@ object BgpPlanner {
           }
           (1, branches.reduce(_ union _))
         case V(gv) =>
-          val atoms2 = expandAtoms(g.patterns)
+          val atoms2 = atomsOf(g.patterns)
           // Path modifiers per graph (round 9): encode the graph into the
           // node ids (graph  node) and run ONE shared closure
           // fixpoint over the union of all graphs' edges — endpoints of
@@ -683,7 +689,7 @@ object BgpPlanner {
       * mapping (all-ground group that matched); Some(Some(df)) = the
       * binding relation (vc-named columns). */
     def evalGroup(g: PatternGroup): Option[Option[DataFrame]] = {
-      val partsOpt = buildParts(expandAtoms(g.patterns))
+      val partsOpt = buildParts(atomsOf(g.patterns))
       if (partsOpt.isEmpty) return None // a ground atom failed
       val (plainVals, undefVals) = g.values.partition(!_.hasUndef)
       var parts: Seq[(Int, DataFrame)] = partsOpt.get ++ plainVals.map(valuesPart)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.Model.Quad
-import graft.sparql.{BgpPlanner, Sparql}
+import graft.sparql.{BgpPlanner, LocalBgp, Sparql}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -783,4 +784,170 @@ class BgpPropertySpec extends AnyFunSuite {
     assert(run >= 15, s"only $run generated cases were runnable")
   }
 
+  // ---- driver-side evaluator (LocalBgp) vs the planner --------------------
+
+  /** Objects include literals whose lexical forms collide (`"x"@en` and
+    * `"x"` both read `x` past the result boundary), so DISTINCT-before-lex
+    * is exercised. Quads may repeat and span two named graphs. */
+  val termNodes: Seq[String] = nodes ++ Seq("\"x\"@en", "\"x\"", "5")
+
+  val bagQuadGen: Gen[Seq[(String, String, String, String)]] =
+    Gen.listOfN(20, for {
+      g <- Gen.oneOf(graphNames.take(2)); s <- Gen.oneOf(nodes)
+      p <- Gen.oneOf(preds); o <- Gen.oneOf(termNodes)
+    } yield (g, s, p, o))
+
+  /** The whole conjunctive fragment: every step form plus `?`, blank
+    * nodes (`_anon` joints), literal constants and projected subsets. */
+  val bagQueryGen: Gen[Query] = {
+    val term: Gen[Term] = Gen.frequency(
+      6 -> Gen.oneOf("a", "b", "c").map(V),
+      2 -> Gen.oneOf(nodes).map(I),
+      1 -> Gen.oneOf(termNodes.drop(nodes.size)).map(L),
+      1 -> Gen.oneOf("_anon1", "_anon2").map(V))
+    val step: Gen[Step] = for {
+      st <- stepGen
+      opt <- Gen.frequency(4 -> false, 1 -> true)
+    } yield if (opt) st.copy(mod = '?') else st
+    val pattern: Gen[TriplePattern] = for {
+      s <- term; o <- term
+      path <- Gen.frequency(3 -> Gen.listOfN(1, step), 1 -> Gen.listOfN(2, step))
+    } yield TriplePattern(s, path, o)
+    for {
+      nPat <- Gen.choose(1, 3)
+      pats <- Gen.listOfN(nPat, pattern)
+      keep <- Gen.choose(0, 2)
+      distinct <- Gen.frequency(3 -> false, 1 -> true)
+    } yield {
+      val named = pats.flatMap(tp => Seq(tp.s, tp.o)).collect {
+        case V(n) if !n.startsWith("_anon") => n }.distinct
+      Query(if (keep == 0) Nil else named.take(keep), distinct, pats, named)
+    }
+  }
+
+  def bag(rows: Seq[Seq[String]]): Map[Seq[String], Int] =
+    rows.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("driver evaluator == planner as bags: union graph, two named graphs, DISTINCT") {
+    val s = spark
+    import s.implicits._
+    var run = 0
+    (1 to 25).foreach { i =>
+      for {
+        qs <- bagQuadGen(Gen.Parameters.default, Seed(40000L + i))
+        q0 <- bagQueryGen(Gen.Parameters.default, Seed(41000L + i))
+      } {
+        val quads = qs.map { case (g, su, p, o) => Quad(g, su, p, o) }.toDF()
+        val index = LocalBgp.Index.build(quads).get
+        assert(LocalBgp.supports(q0))
+        val vars = q0.patterns.flatMap(tp => Seq(tp.s, tp.o)).collect { case V(n) => n }
+        // a projected variable no pattern binds is the planner's error
+        if (vars.isEmpty || q0.selected.forall(vars.contains)) {
+          run += 1
+          for (q <- Seq(q0, q0.copy(distinct = true));
+               graph <- Seq(None, Some(graphNames(0)), Some(graphNames(1)))) {
+            val planned = BgpPlanner.evaluate(quads, q, graph).collect()
+              .map(r => (0 until r.length).map(r.getString).toSeq).toSeq
+            val local = LocalBgp.evaluate(
+              graph.fold(index.union)(index.graph), q).get.map(_.toSeq)
+            assert(bag(local) == bag(planned),
+              s"${graph.getOrElse("union")} ${if (q.distinct) "DISTINCT " else ""}" +
+                s"SELECT ${q.selected} ${q.patterns} over ${qs.size} quads: " +
+                s"local=${bag(local)} planner=${bag(planned)}")
+          }
+        }
+      }
+    }
+    assert(run >= 18, s"only $run generated cases were runnable")
+  }
+
+  /** Two sites sharing one ontology edge, the way the loader merges it. */
+  def siteQuads(): org.apache.spark.sql.DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      Quad("urn:site1#", "urn:a", "urn:p", "urn:b"),
+      Quad("urn:site1#", "urn:b", "urn:p", "urn:c"),
+      Quad("urn:site1#", "urn:a", "urn:q", "1"),
+      Quad("urn:site1#", "urn:K", "urn:sub", "urn:L"),
+      Quad("urn:site2#", "urn:c", "urn:p", "urn:d"),
+      Quad("urn:site2#", "urn:K", "urn:sub", "urn:L")).toDF()
+  }
+
+  def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.collect().toSeq.map(_.toSeq.map(v => if (v == null) null else v.toString))
+
+  test("queries outside the conjunctive fragment plan through BgpPlanner and answer right") {
+    val engine = new Engine(spark, siteQuads(), spark.range(0).toDF())
+    val cases = Seq(
+      "SELECT ?x WHERE { ?x <urn:p> ?y FILTER(?y != <urn:c>) }" ->
+        Seq(Seq("urn:a"), Seq("urn:c")),
+      "SELECT ?x ?v WHERE { ?x <urn:p> ?y OPTIONAL { ?x <urn:q> ?v } }" ->
+        Seq(Seq("urn:a", "1"), Seq("urn:b", null), Seq("urn:c", null)),
+      "SELECT ?x WHERE { { ?x <urn:q> ?v } UNION { ?x <urn:p> <urn:d> } }" ->
+        Seq(Seq("urn:a"), Seq("urn:c")),
+      "SELECT ?g ?x WHERE { GRAPH ?g { ?x <urn:p> <urn:d> } }" ->
+        Seq(Seq("urn:site2#", "urn:c")),
+      "SELECT ?x ?y WHERE { VALUES ?x { <urn:a> <urn:c> } ?x <urn:p> ?y }" ->
+        Seq(Seq("urn:a", "urn:b"), Seq("urn:c", "urn:d")),
+      "SELECT (COUNT(?x) AS ?n) WHERE { ?x <urn:p> ?y }" -> Seq(Seq("3")),
+      "ASK { <urn:a> <urn:p>+ <urn:d> }" -> Seq(Seq("true")),
+      "CONSTRUCT { ?y <urn:r> ?x } WHERE { ?x <urn:p> ?y }" ->
+        Seq(Seq("urn:b", "urn:r", "urn:a"), Seq("urn:c", "urn:r", "urn:b"),
+          Seq("urn:d", "urn:r", "urn:c")),
+      "DESCRIBE <urn:c>" -> Seq(Seq("urn:c", "urn:p", "urn:d")),
+      "SELECT ?x FROM <urn:site2#> WHERE { ?x <urn:p> ?y }" -> Seq(Seq("urn:c")))
+    cases.foreach { case (text, want) =>
+      assert(!LocalBgp.supports(Sparql.parse(text)), text)
+      assert(bag(rowsOf(engine.sparql(text))) == bag(want), text)
+    }
+    // ORDER BY / LIMIT: the order is part of the answer
+    val ordered = "SELECT ?x WHERE { ?x <urn:p> ?y } ORDER BY DESC(?x) LIMIT 2"
+    assert(!LocalBgp.supports(Sparql.parse(ordered)))
+    assert(rowsOf(engine.sparql(ordered)) == Seq(Seq("urn:c"), Seq("urn:b")))
+    // conjunctive, but planned: a projected ?site is overwritten by the
+    // site column, and a variable projected twice is an error
+    assert(rowsOf(engine.sparql("SELECT ?site WHERE { ?site <urn:p> ?y }",
+      Seq("site1"))) == Seq(Seq("site1"), Seq("site1")))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      engine.sparql("SELECT ?x ?x WHERE { ?x <urn:p> ?y }")
+    }
+    // and a conjunctive query over the same engine stays on the driver
+    val conj = "SELECT ?x WHERE { ?x <urn:p>/<urn:p> ?z }"
+    assert(engine.sparql(conj).queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(bag(rowsOf(engine.sparql(conj))) == bag(Seq(Seq("urn:a"), Seq("urn:b"))))
+    assert(bag(rowsOf(engine.sparql(conj, Seq("site1", "site2")))) ==
+      bag(Seq(Seq("urn:a", "site1"))))
+  }
+
+  test("a cross product past the row limit is abandoned on the driver and planned") {
+    val s = spark
+    import s.implicits._
+    // 1415² = 2,002,225 solutions: just over Closure.ClosureRowLimit
+    val n = 1415
+    val quads = (0 until n).map(i => Quad("urn:g#", s"urn:s$i", "urn:p", "urn:o")).toDF()
+    val text = "SELECT ?a ?b WHERE { ?a <urn:p> ?x . ?b <urn:p> ?y }"
+    val q = Sparql.parse(text)
+    assert(LocalBgp.supports(q))
+    assert(n.toLong * n > graft.plans.Closure.ClosureRowLimit)
+    val index = LocalBgp.Index.build(quads).get
+    assert(LocalBgp.evaluate(index.union, q).isEmpty)
+    val df = new Engine(spark, quads, spark.range(0).toDF()).sparql(text)
+    assert(!df.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(df.count() == n.toLong * n)
+    assert(df.filter($"a" === $"b").count() == n)
+  }
+
+  test("a graph over the driver-side cutoff plans through BgpPlanner") {
+    import org.apache.spark.sql.functions._
+    val limit = graft.plans.Closure.DriverSideLimit
+    val quads = spark.range(limit + 1).select(lit("urn:g#").as("graph"),
+      concat(lit("urn:s"), col("id")).as("s"), lit("urn:p").as("p"),
+      concat(lit("urn:o"), col("id")).as("o"))
+    assert(LocalBgp.Index.build(quads).isEmpty)
+    val df = new Engine(spark, quads, spark.range(0).toDF())
+      .sparql("SELECT ?o WHERE { <urn:s7> <urn:p>* ?o }")
+    assert(!df.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(bag(rowsOf(df)) == bag(Seq(Seq("urn:s7"), Seq("urn:o7"))))
+  }
 }

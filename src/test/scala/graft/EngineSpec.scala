@@ -1,0 +1,103 @@
+package graft
+
+import graft.sparql.LocalBgp
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** The flagship's first level runs on the driver: once the graph index is
+  * built, a conjunctive `dataSparql` reaches its pruned scan without a
+  * single Spark job, and anything else still plans through BgpPlanner. */
+class EngineSpec extends AnyFunSuite {
+
+  lazy val spark = TestSpark.spark
+
+  private val Tag = "graft.test.jobs"
+
+  /** `body`'s result, the Spark jobs submitted while it ran and the bytes
+    * their tasks returned to the driver. Listener events arrive
+    * asynchronously, in order: a tagged sentinel job seen by the listener
+    * means every earlier job start and task end has been seen too. */
+  def sparkWorkDuring[T](body: => T): (T, Int, Long) = {
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val shipped = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).getOrElse(""))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shipped.addAndGet(m.resultSize))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(Tag, "sentinel")
+      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(tags.contains("sentinel"), "listener never saw the sentinel job")
+      // the sentinel's own one-row count adds a few bytes at most
+      (out, tags.asScala.count(_ != "sentinel"), shipped.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, jobs, _) = sparkWorkDuring(body)
+    (out, jobs)
+  }
+
+  test("a conjunctive dataSparql submits no Spark job until its frame is consumed") {
+    val s = spark; import s.implicits._
+    val quads = Seq(
+      Model.Quad("urn:site1#", "urn:site1#p1", Model.RdfType, "urn:cls#Temp"),
+      Model.Quad("urn:site1#", "urn:cls#Temp", Model.RdfsSubClassOf, "urn:cls#Point"),
+      Model.Quad("urn:site1#", "urn:site1#p1", "urn:ts", "\"u1\""),
+      Model.Quad("urn:site2#", "urn:site2#p2", Model.RdfType, "urn:cls#Point"),
+      Model.Quad("urn:site2#", "urn:site2#p2", "urn:ts", "\"u2\"")).toDF()
+    val base = java.time.Instant.parse("2020-06-01T00:00:00Z")
+    val fact = (0 until 15).map { i =>
+      (java.sql.Timestamp.from(base.plusSeconds(60L * i)),
+        i * 1.0, if (i < 10) "u1" else "u2")
+    }.toDF("time", "value", "uuid")
+    val engine = new Engine(spark, quads, fact)
+    val conj =
+      s"""SELECT ?id WHERE {
+         |  ?p <${Model.RdfType}>/<${Model.RdfsSubClassOf}>* <urn:cls#Point> .
+         |  ?p <urn:ts> ?id }""".stripMargin
+    // the first query builds the graph index
+    assert(engine.sparql(conj).as[String].collect().sorted.toSeq == Seq("u1", "u2"))
+
+    val (all, allJobs) = jobsDuring(engine.dataSparql(conj))
+    val (site2, siteJobs) = jobsDuring(engine.dataSparql(conj, sites = Seq("site2")))
+    assert(allJobs == 0 && siteJobs == 0,
+      s"conjunctive dataSparql ran $allJobs (union) / $siteJobs (site) jobs")
+    val (n, consumeJobs) = jobsDuring(all.count())
+    assert(n == 15 && site2.count() == 5)
+    assert(consumeJobs > 0, "the listener saw no job for the scan itself")
+
+    val filtered =
+      s"""SELECT ?id WHERE { ?p <${Model.RdfType}> ?c . ?p <urn:ts> ?id
+         |  FILTER(?c = <urn:cls#Temp>) }""".stripMargin
+    assert(!engine.sparql(filtered).queryExecution.logical.isInstanceOf[LocalRelation])
+    val (u1, filterJobs) = jobsDuring(engine.dataSparql(filtered))
+    assert(filterJobs > 0, "a FILTER query must resolve its ids through BgpPlanner")
+    assert(u1.count() == 10)
+  }
+
+  test("a graph over the cutoff is ruled out by a count, without shipping its quads") {
+    import org.apache.spark.sql.functions._
+    val limit = graft.plans.Closure.DriverSideLimit
+    val quads = spark.range(limit + 1).select(lit("urn:g#").as("graph"),
+      concat(lit("urn:s"), col("id")).as("s"), lit("urn:p").as("p"),
+      concat(lit("urn:o"), col("id")).as("o")).cache()
+    try {
+      quads.count()
+      val (index, _, shipped) = sparkWorkDuring(LocalBgp.Index.build(quads))
+      assert(index.isEmpty)
+      // the quads are megabytes even compressed; a count's tasks return bytes
+      assert(shipped < 256 * 1024, s"$shipped result bytes reached the driver")
+    } finally quads.unpersist()
+  }
+}

@@ -59,4 +59,13 @@ class FlagshipSpec extends AnyFunSuite {
       s"scan read ${readUuids.size} stream dirs, expected ${tempUuids.size}")
     assert(df.count() > 0)
   }
+
+  test("ingest spot-check reports a missing stream directory by name") {
+    val root = java.nio.file.Files.createTempDirectory("flagship-spot").toString
+    val e = intercept[IllegalArgumentException] {
+      Flagship.spotCheck(spark, s"$root/store")
+    }
+    assert(e.getMessage.contains("ingest spot-check") &&
+      e.getMessage.contains(s"uuid=${Flagship.uuidOf(5)} is missing"), e.getMessage)
+  }
 }

@@ -33,6 +33,38 @@ class RobustnessSpec extends AnyFunSuite {
     assert(viaFallback.filter(col("src") === "n1" && col("dst") === "n80").count() == 1)
   }
 
+  test("driver-side closures pin no cached blocks") {
+    val s = spark; import s.implicits._
+    val edges = (1 until 20).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    // compared by id: the context cleaner may drop earlier tests' blocks
+    // meanwhile, so only an RDD persisted here counts
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Closure.transitive(edges).count() == 19 * 20 / 2)
+    assert(Closure.reachableFrom(edges, "n1").count() == 19)
+    assert(Closure.reachableFrom(edges, "n20", reverse = true).count() == 19)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"a driver-side closure left persisted RDDs $added behind")
+  }
+
+  test("distributed closures accept edges filtered from a union of literal columns") {
+    // the planner's edge shape over such quads: Spark 4.1 inferred plan
+    // constraints over attributes the checkpointed fixpoint no longer had
+    // and failed with "key not found: src#…"
+    val chains = spark.range(10).select(concat(lit("a"), col("id")).as("a"),
+      concat(lit("b"), col("id")).as("b"), concat(lit("c"), col("id")).as("c"))
+    val quads = chains.select(col("a").as("s"), col("b").as("o"))
+      .union(chains.select(col("b").as("s"), col("c").as("o")))
+      .select(col("s"), lit("next").as("p"), col("o"))
+      .union(spark.range(5).select(concat(lit("e"), col("id")).as("s"),
+        lit("type").as("p"), lit("C").as("o")))
+      .cache()
+    try {
+      val edges = quads.filter(col("p") === "next").select(col("s").as("src"), col("o").as("dst"))
+      assert(Closure.transitive(edges, driverSideLimit = 0).count() == 30)
+      assert(Closure.reachableFrom(edges, "a3", driverSideLimit = 0).count() == 2)
+    } finally quads.unpersist()
+  }
+
   // --- Dedup: blockPairs guard + CC non-convergence ------------------------
 
   test("blockPairs fails loudly when a block exceeds maxBlock") {
