@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ⇄ Expression bridge.
+/** Access to `private[sql]` Spark internals.
   *
   * Spark 4 moved `Column` to a backend-agnostic ColumnNode representation;
   * the converters (`classic.ExpressionUtils`) are `private[sql]`. Custom
@@ -15,4 +16,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A session that starts with a copy of `spark`'s runtime conf (and its
+    * temp views, UDFs and listeners) and shares its SparkContext and cache;
+    * conf set on the copy does not reach `spark`. `newSession()` would
+    * start from the static defaults instead. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

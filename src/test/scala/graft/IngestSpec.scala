@@ -1,10 +1,23 @@
 package graft
 
 import graft.sources.{Ingest, StatsIndex}
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** Ingest round-trip + stats index, mirroring the reference pipeline
   * (reference: transform.py + make-metadata.py, verified numbers SURVEY.md §5
@@ -332,5 +345,151 @@ class IngestSpec extends AnyFunSuite {
       val times = spark.read.parquet(f).select("time").collect().map(_.getTimestamp(0).getTime)
       assert(times.sameElements(times.sorted), s"file $f not time-sorted")
     }
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    finally walk.close()
+  }
+
+  /** The `time` column's parquet type and its per-row-group statistics,
+    * read from the footer of `file`. */
+  private def timeFooter(file: Path): (PrimitiveType, Seq[Statistics[_]]) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), new Configuration()))
+    try {
+      val footer = reader.getFooter
+      val tpe = footer.getFileMetaData.getSchema.getColumnDescription(Array("time")).getPrimitiveType
+      val stats = footer.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "time").get.getStatistics)
+      (tpe, stats)
+    } finally reader.close()
+  }
+
+  private def micros(t: java.time.Instant): Long =
+    t.getEpochSecond * 1000000L + t.getNano / 1000
+
+  test("footer stores time as INT64 TIMESTAMP(MICROS, true) with min/max stats " +
+      "(transform.py:39 coerce_timestamps='us')") {
+    val files = parquetFiles(destDir.resolve(s"collection=bldg1/uuid=$uuid1"))
+    assert(files.size == 1)
+    val (tpe, stats) = timeFooter(files.head)
+    assert(tpe.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+    assert(tpe.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS))
+    assert(stats.nonEmpty && stats.forall(_.hasNonNullValue))
+    val base = java.time.Instant.parse("2016-11-30T00:00:00Z")
+    assert(stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min == micros(base))
+    assert(stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max ==
+      micros(base.plusSeconds(60L * 2879)))
+  }
+
+  test("ingest writes without a shuffle: one sort, a broadcast join at most") {
+    val csv = Files.createTempDirectory("plan-csv")
+    val dest = Files.createTempDirectory("plan-fact").resolve("d").toString
+    writeCsv(csv, uuid1, "a", 100)
+    writeCsv(csv, uuid2, "b", 100)
+    // the ingest's session is a clone of this one and inherits its listeners
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    def writePlan = seen.asScala.map(_.executedPlan)
+      .find(p => helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    spark.listenerManager.register(listener)
+    try {
+      Ingest.transform(spark, "c", csv.toString, dest)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writePlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally spark.listenerManager.unregister(listener)
+    val plan = writePlan.getOrElse(fail("no write plan was seen"))
+    assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+    assert(helper.collect(plan) { case e: BroadcastExchangeExec => e }.size <= 1, plan.toString)
+    assert(helper.collect(plan) { case e: SortExec => e }.size == 1, plan.toString)
+    assert(spark.read.parquet(dest).count() == 200)
+  }
+
+  test("rows whose time or value fails to parse are dropped; the rest read back") {
+    // a space in the path: the header rows' paths and the listed files must
+    // still match up despite their different URI spellings
+    val csv = Files.createDirectory(Files.createTempDirectory("bad-csv").resolve("csv dir"))
+    val dest = Files.createTempDirectory("bad-fact").resolve("d").toString
+    val base = java.time.Instant.parse("2016-11-30T00:00:00Z")
+    val good = (0 until 10).map(i => (base.plusSeconds(60L * i), i + 0.5))
+    val lines = good.map { case (t, v) => s"${t.toString.replace("T", " ").replace("Z", "+00:00")},$v" }
+    Files.write(csv.resolve(s"$uuid1.csv"), (Seq("datetime,lbl") ++ lines.take(5) ++
+      Seq("not-a-time,2.0", "2016-11-30 01:00:00+00:00,not-a-number") ++ lines.drop(5))
+      .mkString("\n").getBytes)
+    Ingest.transform(spark, "c", csv.toString, dest)
+    val got = spark.read.parquet(dest).select("time", "value").collect()
+      .map(r => (r.getTimestamp(0).toInstant, r.getDouble(1)))
+    assert(got.toSeq == good)
+  }
+
+  test("a UUID-named CSV without a header row fails the ingest, naming the file") {
+    val csv = Files.createTempDirectory("nohdr-csv")
+    val dest = Files.createTempDirectory("nohdr-fact").resolve("d")
+    writeCsv(csv, uuid1, "a", 10)
+    Files.write(csv.resolve(s"$uuid2.csv"),
+      "2016-11-30 00:00:00+00:00,1.0\n2016-11-30 00:01:00+00:00,2.0".getBytes)
+    val e = intercept[IllegalArgumentException](
+      Ingest.transform(spark, "c", csv.toString, dest.toString))
+    assert(e.getMessage.contains(s"$uuid2.csv") && e.getMessage.contains("found 0"), e.getMessage)
+    assert(!Files.exists(dest))
+  }
+
+  test("a UUID-named CSV with two header rows fails the ingest, naming the file") {
+    val csv = Files.createTempDirectory("twohdr-csv")
+    val dest = Files.createTempDirectory("twohdr-fact").resolve("d")
+    writeCsv(csv, uuid1, "a", 10)
+    Files.write(csv.resolve(s"$uuid2.csv"), Seq("datetime,a", "2016-11-30 00:00:00+00:00,1.0",
+      "datetime,b", "2016-11-30 00:01:00+00:00,2.0").mkString("\n").getBytes)
+    val e = intercept[IllegalArgumentException](
+      Ingest.transform(spark, "c", csv.toString, dest.toString))
+    assert(e.getMessage.contains(s"$uuid2.csv") && e.getMessage.contains("found 2"), e.getMessage)
+    assert(!Files.exists(dest))
+  }
+
+  test("ingest appends into a store whose existing files hold INT96 times") {
+    val csv = Files.createTempDirectory("int96-csv")
+    val dest = Files.createTempDirectory("int96-fact").resolve("d")
+    // Spark's default parquet timestamp type is INT96; a store written
+    // before ingest stored µs times looks like this
+    val old = spark.newSession()
+    old.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val early = java.time.Instant.parse("2016-11-29T00:00:00Z")
+    val oldRows = for (u <- Seq(uuid1, uuid2); i <- 0 until 5)
+      yield (java.sql.Timestamp.from(early.plusSeconds(60L * i)), i.toDouble, "old", "urn:c/old", "c", u)
+    old.createDataFrame(oldRows).toDF("time", "value", "label", "uri", "collection", "uuid")
+      .write.partitionBy("collection", "uuid").parquet(dest.toString)
+    assert(parquetFiles(dest).forall(f => timeFooter(f)._1.getPrimitiveTypeName == PrimitiveTypeName.INT96))
+    writeCsv(csv, uuid1, "a", 20)
+    Ingest.transform(spark, "c", csv.toString, dest.toString)
+    val got = spark.read.parquet(dest.toString).select("uuid", "time").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).toInstant))
+    val base = java.time.Instant.parse("2016-11-30T00:00:00Z")
+    val expected = oldRows.map(r => (r._6, r._1.toInstant)) ++
+      (0 until 20).map(i => (uuid1, base.plusSeconds(60L * i)))
+    assert(got.sorted.toSeq == expected.sorted)
+  }
+
+  test("the caller's session conf is unchanged, and its runtime time zone parses the CSV") {
+    val csv = Files.createTempDirectory("tz-csv")
+    val dest = Files.createTempDirectory("tz-fact").resolve("d").toString
+    Files.write(csv.resolve(s"$uuid1.csv"),
+      "datetime,a\n2016-11-30 00:00:00,1.0\n2016-11-30 00:01:00,2.0".getBytes)
+    val tz = "spark.sql.session.timeZone"
+    val before = spark.conf.get(tz)
+    spark.conf.set(tz, "America/Los_Angeles")
+    try {
+      val conf = spark.conf.getAll
+      Ingest.transform(spark, "c", csv.toString, dest)
+      assert(spark.conf.getAll == conf)
+    } finally spark.conf.set(tz, before)
+    val got = spark.read.parquet(dest).select("time").collect().map(_.getTimestamp(0).toInstant).sorted
+    assert(got.toSeq == Seq("2016-11-30T08:00:00Z", "2016-11-30T08:01:00Z").map(java.time.Instant.parse))
   }
 }
