@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.BoundParams
 import graft.sources.Turtle
 import graft.sparql.{BgpPlanner, LocalBgp, Sparql}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -45,12 +46,24 @@ import scala.jdk.CollectionConverters._
   * store. Only when the id set grows beyond `inListThreshold` do we fall
   * back to a broadcast left-semi join (dynamic partition pruning handles
   * the rest). The fact table is never collected.
+  *
+  * The time window reaches the scan's generated code as bound parameters
+  * ([[graft.plans.BoundParams]], installed in the session by every
+  * engine): Spark would otherwise inline `start` and `end` into the Java
+  * source of the scan's codegen stage, so each new window would compile a
+  * new class. With them bound, all calls of one plan shape share one
+  * compiled class, while the Parquet pushdown still receives the literal
+  * values and skips row groups and pages as before. What stays inlined:
+  * `dataSparql`'s `limit`, the uuid IN-list (a partition filter, which
+  * never reaches generated code) and any literal outside a comparison.
   */
 final class Engine(
     val spark: SparkSession,
     val quads: DataFrame,
     val fact: DataFrame,
     inListThreshold: Int = 100000) {
+
+  BoundParams.install(spark)
 
   /** Union-of-graphs triples, deduped once and cached: every BGP atom of
     * every un-scoped planned query re-reads this relation. */

@@ -39,7 +39,7 @@ object StatsIndex {
   }
 
   /** Incrementally MAINTAIN the stats table after the store changes
-    * (round 15 — the reference's own pattern applied to its own index:
+    * (the reference's own pattern applied to its own index:
     * make-metadata.py:8-22 persists planning state once; a daily
     * pipeline then lands new fragments and must not re-scan the store
     * to keep it current). Cost ∝ changed fragments:
@@ -57,7 +57,7 @@ object StatsIndex {
     *     — tmp write + two-rename swap), which only runs when staleness
     *     is actually present.
     *
-    * File identity is compared on DECODED absolute paths (round 16):
+    * File identity is compared on DECODED absolute paths:
     * the Hadoop listing is raw by construction (`Path.toUri.getPath`
     * is the literal filename) while `input_file_name()` is a
     * percent-encoded URI, so ONLY the stats-row side URI-decodes —
@@ -77,7 +77,7 @@ object StatsIndex {
   def refresh(spark: SparkSession, root: String, statsPath: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     // Decoded-path identity, decoding ONLY the side that is actually
-    // encoded (round 16 follow-up): the listing side is raw by
+    // encoded: the listing side is raw by
     // construction — Hadoop Path unescapes its internal URI form, so
     // `toUri.getPath` IS the literal filename (a file literally named
     // `a%20b.parquet` stays `a%20b.parquet`); running the raw string
@@ -102,13 +102,13 @@ object StatsIndex {
       if (f.isFile && f.getPath.getName.endsWith(".parquet"))
         current += ((f.getPath.toUri.getPath, f.getPath.toString))
     }
-    // group stored strings by NORMALIZED identity (round 17, ADVICE: a
-    // pre-fix table can hold one file under several encodings — toMap
-    // kept one arbitrary encoding per identity, so a stale file dropped
-    // only one of its rows per refresh and live-file duplicates were
-    // never repaired). distinct first: exact-duplicate strings must not
-    // masquerade as two encodings (the isin drop could not separate
-    // them and would remove both rows).
+    // group stored strings by NORMALIZED identity: a table written
+    // before identities were decoded can hold one file under several
+    // encodings, and keeping one arbitrary encoding per identity would
+    // drop only one of a stale file's rows per refresh and never repair
+    // a live file's duplicates. distinct first: exact-duplicate strings
+    // must not masquerade as two encodings (the isin drop could not
+    // separate them and would remove both rows).
     val knownGrouped: Map[String, Seq[String]] =
       spark.read.parquet(statsPath).select("file")
         .collect().map(_.getString(0)).toSeq.distinct.groupBy(normRow)
@@ -118,7 +118,7 @@ object StatsIndex {
     // drops happen by ORIGINAL stored strings — exact equality, no
     // re-normalization inside the SQL filter. Stale identity → ALL its
     // encodings go; live identity with >1 encoding → its stats rows are
-    // duplicated (same file indexed twice pre-fix) → keep one
+    // duplicated (the same file indexed twice) → keep one
     // deterministic survivor (smallest string), heal the rest.
     val staleOrig = knownGrouped.collect {
       case (n, origs) if !currentByNorm.contains(n) => origs
@@ -195,7 +195,10 @@ object StatsIndex {
     * fragments): a 10×-larger store with the same matching set costs the
     * same to plan. `basePath` keeps the hive partition columns
     * (collection/uuid) in the schema; the residual time filter restores
-    * row-exact semantics over the file-granular stats cut. Empty match →
+    * row-exact semantics over the file-granular stats cut; its bounds,
+    * like the stats cut's, reach generated code as bound parameters
+    * ([[graft.plans.BoundParams]], installed here), so calls that differ
+    * only in their window share one compiled class. Empty match →
     * empty relation (schema probed from one arbitrary stats row's file —
     * one footer read, still no listing). */
   def prunedScan(
@@ -205,6 +208,7 @@ object StatsIndex {
       uuids: Seq[String],
       start: String,
       end: String): DataFrame = {
+    graft.plans.BoundParams.install(spark)
     val files = prunedFiles(stats, uuids, start, end)
     val timePred = col("time") >= lit(start).cast("timestamp") &&
       col("time") <= lit(end).cast("timestamp")

@@ -1,8 +1,14 @@
 package graft
 
+import graft.plans.BoundParams
 import graft.sparql.LocalBgp
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, FilterExec}
+import org.apache.spark.sql.execution.datasources.FileSourceStrategy
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -84,6 +90,57 @@ class EngineSpec extends AnyFunSuite {
     val (u1, filterJobs) = jobsDuring(engine.dataSparql(filtered))
     assert(filterJobs > 0, "a FILTER query must resolve its ids through BgpPlanner")
     assert(u1.count() == 10)
+  }
+
+  test("calls that differ only in their window share one compiled scan; the pushed " +
+      "filters and the explain text keep the literal bounds") {
+    val s = spark; import s.implicits._
+    val root = TempDirs.create("graft-engine-params") + "/store"
+    val base = java.time.Instant.parse("2020-07-08T09:10:11Z")
+    (0 until 300).map { i =>
+      (java.sql.Timestamp.from(base.plusSeconds(60L * i)), i * 0.5, s"u${i % 3}")
+    }.toDF("time", "value", "uuid").write.partitionBy("uuid").parquet(root)
+    val quads = Seq(
+      Model.Quad("urn:site1#", "urn:site1#p1", Model.RdfType, "urn:cls#Temp"),
+      Model.Quad("urn:site1#", "urn:site1#p1", "urn:ts", "\"u1\"")).toDF()
+    val engine = new Engine(spark, quads, spark.read.parquet(root))
+    val query = s"SELECT ?id WHERE { ?p <${Model.RdfType}> <urn:cls#Temp> . ?p <urn:ts> ?id }"
+    def at(minute: Int): String = base.plusSeconds(60L * minute).toString
+    def compilesDuring[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    val calls: Seq[(String, (Int, Int) => DataFrame)] = Seq(
+      "data" -> ((a, b) => engine.data(Seq("u1"), at(a), at(b))),
+      "dataSparql" -> ((a, b) => engine.dataSparql(query, start = at(a), end = at(b))))
+    for (((name, call), k) <- calls.zipWithIndex) {
+      compilesDuring(call(3 + k, 250 - k).collect())
+      val (from, to) = (61 + 3 * k, 211 - 3 * k)
+      val (rows, compiles) = compilesDuring(call(from, to).collect())
+      assert(compiles == 0, s"the second $name call compiled $compiles classes")
+      // u1's rows include the ones stamped exactly at either bound
+      assert(rows.map(_.getAs[Double]("value")).toSet ==
+        (from to to).filter(_ % 3 == 1).map(_ * 0.5).toSet, name)
+    }
+
+    val df = engine.data(Seq("u1"), at(61), at(211))
+    val plan = df.queryExecution.executedPlan
+    val scan = plan.collectFirst { case f: FileSourceScanExec => f }.get
+    val bounds = Seq(61, 211).map(m => java.sql.Timestamp.from(base.plusSeconds(60L * m)))
+    val pushed = scan.metadata("PushedFilters")
+    assert(pushed.contains(GreaterThanOrEqual("time", bounds(0)).toString) &&
+      pushed.contains(LessThanOrEqual("time", bounds(1)).toString), pushed)
+    assert(!scan.dataFilters.exists(_.exists(_.isInstanceOf[BoundParams.Param])))
+    val filter = plan.collectFirst { case f: FilterExec => f }.get
+    assert(filter.condition.exists(_.isInstanceOf[BoundParams.Param]))
+    // the filter FileSourceStrategy plans without the rewrite prints the same
+    val inlined = FileSourceStrategy(df.queryExecution.optimizedPlan)
+      .flatMap(_.collectFirst { case f: FilterExec => f }).head
+    assert(!inlined.condition.exists(_.isInstanceOf[BoundParams.Param]))
+    assert(filter.simpleString(Int.MaxValue) == inlined.simpleString(Int.MaxValue))
+    assert(df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .contains(s"Condition : ${inlined.condition}\n"))
   }
 
   test("a graph over the cutoff is ruled out by a count, without shipping its quads") {
