@@ -24,62 +24,77 @@ object SparkEntry {
     else s.read.parquet(s"$dir/$name.parquet")
   }
 
+  /** Stream an sf table by its shape. A directory-shaped table (the
+    * scale-probe builds, any real warehouse) streams by its path: the
+    * dir + pathGlobFilter form matches leaf file names and would
+    * silently see zero input files. A flat single-file table (the sf
+    * fixtures) must keep the glob-filter form, because the file source
+    * needs a directory base path. */
+  private def tableStream(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = s.read.parquet(path).schema
+    if (new java.io.File(path).isDirectory)
+      s.readStream.schema(schema).parquet(path)
+    else s.readStream.schema(schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+  }
+
   /** Decimal-exact sum surfaced as double (identical in Spark and DuckDB). */
   private def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
 
-  /** q111's partitioned-store fixture, built once per (sf dir, JVM) so the
-    * timed query body measures the stats-pruned scan, not the store's
-    * file creation. uuid = user_id % 100 caps the store at 100 stream dirs
-    * at ANY scale factor (file CREATION, not data volume, dominates a
-    * partitioned write of a small-file store); maxRecordsPerFile targets
-    * ~3 time-disjoint files per stream so the stats cut still prunes at
-    * file granularity inside matching streams. */
-  private val statsStoreCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** Persisted fixtures: the offline half of a query (a store, an index)
+    * built once per (name, sf dir) per JVM, so the timed body measures
+    * serving, not the build. Every build is deterministic, so the memo
+    * cannot change a result. A build that throws is not memoized: the
+    * next call builds again. */
+  private val memo = scala.collection.concurrent.TrieMap[(String, String), Any]()
 
-  /** BPE merge table per (sf dir, JVM): q126 (trainer output) and q133
-    * (encoder input) share the same 12 learned merges — training runs
-    * once, not once per query. Determinism is the trainer's contract
-    * (tie-break freq desc, left asc, right asc), so the cache cannot
-    * change any result. */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap[String, Seq[operators.Bpe.Merge]]()
+  private def memoized[A](name: String, dir: String)(make: => A): A =
+    memo.getOrElseUpdate((name, dir), make).asInstanceOf[A]
+
+  /** A fresh `graft_<name>_<uuid>` dir path under java.io.tmpdir,
+    * registered with [[TempDirs]] for end-of-JVM cleanup. A query whose
+    * build mutates its index (a stream appends to it) takes one per
+    * invocation. */
+  private def freshRoot(name: String): String =
+    TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
+      s"/graft_${name}_${java.util.UUID.randomUUID()}")
+
+  /** The root of fixture `name` over the sf tables at `dir`: a
+    * [[freshRoot]] filled by `build` on the first call. */
+  private[graft] def fixture(name: String, dir: String)(
+      build: String => Unit): String =
+    memoized(name, dir) {
+      val root = freshRoot(name)
+      build(root)
+      root
+    }
+
+  /** BPE merge table: q126 (trainer output) and q133 (encoder input)
+    * share the same 12 learned merges. Determinism is the trainer's
+    * contract (tie-break freq desc, left asc, right asc). */
   private def bpeMergesFor(s: SparkSession, dir: String): Seq[operators.Bpe.Merge] =
-    bpeMergesCache.getOrElseUpdate(dir, operators.Bpe.trainFromWordFreq(
+    memoized("bpe", dir)(operators.Bpe.trainFromWordFreq(
       operators.Bpe.wordFreq(t(s, dir, "documents"), "text"), numMerges = 12))
-  private def statsStoreFor(s: SparkSession, dir: String): String =
-    statsStoreCache.getOrElseUpdate(dir, {
-      val out = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_statscan_${java.util.UUID.randomUUID()}")
-      val src = t(s, dir, "events")
-      val nRows = src.count()
-      val fact = src.select(
-        col("ts").as("time"), col("value"),
-        col("event_type").as("label"),
-        lit("bench").as("collection"),
-        format_string("00000000-0000-0000-0000-%012d",
-          pmod(col("user_id"), lit(100))).as("uuid"))
-      fact.repartition(col("uuid")).sortWithinPartitions("uuid", "time")
-        .write.mode("overwrite").partitionBy("collection", "uuid")
-        .option("maxRecordsPerFile", math.max(10L, nRows / 100 / 3)).parquet(out)
-      graft.sources.StatsIndex.build(s, out, s"$out-stats")
-      out
-    })
 
-  /** Per-sf-dir REFRESH-maintained stats store (round 15, q184): the
-    * q111 store built in two eras — the even-user half written first
-    * and indexed by [[graft.sources.StatsIndex.build]], the odd half
-    * landing later as appended fragments picked up by
-    * [[graft.sources.StatsIndex.refresh]] (cost ∝ new files: listing +
-    * scan of the new fragments only). A pruned scan planned from the
-    * refresh-maintained table must equal the full recomputation —
-    * q184's oracle is q111's verbatim — so a refresh that misses a
-    * fragment or keeps a stale row breaks the hash. */
-  private val statsRefreshCache = scala.collection.concurrent.TrieMap[String, String]()
-  private def statsRefreshStoreFor(s: SparkSession, dir: String): String =
-    statsRefreshCache.getOrElseUpdate(dir, {
-      val out = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_statsrefresh_${java.util.UUID.randomUUID()}")
+  /** q111's partitioned events store, with its stats table at
+    * `<root>-stats`. uuid = user_id % 100 caps the store at 100 stream
+    * dirs at any scale factor (file creation, not data volume, dominates
+    * a partitioned write of a small-file store); maxRecordsPerFile
+    * targets ~3 time-disjoint files per stream so the stats cut still
+    * prunes at file granularity inside matching streams.
+    *
+    * With `refresh` (q184) the store is written in two eras: even
+    * event ids first, indexed by [[graft.sources.StatsIndex.build]];
+    * odd ones later as appended fragments that
+    * [[graft.sources.StatsIndex.refresh]] picks up. The era is keyed on
+    * event_id, not user_id, so every uuid dir gets fragments from both
+    * eras and the refresh must find new files inside existing partition
+    * dirs, not just new dirs. q184's oracle is q111's verbatim, so a
+    * refresh that misses a fragment or keeps a stale row breaks it. */
+  private def statsStore(s: SparkSession, dir: String, refresh: Boolean): String =
+    fixture(if (refresh) "statsrefresh" else "statscan", dir) { out =>
       val src = t(s, dir, "events")
       val nRows = src.count()
       val fact = src.select(
@@ -88,34 +103,38 @@ object SparkEntry {
         lit("bench").as("collection"),
         format_string("00000000-0000-0000-0000-%012d",
           pmod(col("user_id"), lit(100))).as("uuid"),
-        // era keyed on event_id, NOT user_id: every uuid directory gets
-        // fragments from BOTH eras, so the refresh must discover new
-        // files inside EXISTING partition dirs, not just new dirs
         pmod(col("event_id"), lit(2)).as("_era"))
-      def write(era: Int, mode: String): Unit =
-        fact.filter(col("_era") === era).drop("_era")
+      def write(rows: DataFrame, mode: String): Unit =
+        rows.drop("_era")
           .repartition(col("uuid")).sortWithinPartitions("uuid", "time")
           .write.mode(mode).partitionBy("collection", "uuid")
           .option("maxRecordsPerFile", math.max(10L, nRows / 100 / 3))
           .parquet(out)
-      write(0, "overwrite")
-      graft.sources.StatsIndex.build(s, out, s"$out-stats")
-      write(1, "append") // the new era lands as appended fragments
-      graft.sources.StatsIndex.refresh(s, out, s"$out-stats")
-      out
-    })
+      val stats = TempDirs.register(s"$out-stats")
+      if (refresh) {
+        write(fact.filter(col("_era") === 0), "overwrite")
+        graft.sources.StatsIndex.build(s, out, stats)
+        write(fact.filter(col("_era") === 1), "append")
+        graft.sources.StatsIndex.refresh(s, out, stats)
+      } else {
+        write(fact, "overwrite")
+        graft.sources.StatsIndex.build(s, out, stats)
+      }
+    }
 
-  /** Persisted dedup indexes per (sf dir, JVM) — round 14 (q171–q173):
-    * the CORPUS split's (doc_id % 5 != 0) three index families written
-    * once; the timed query bodies are the incremental BATCH queries,
-    * which is the operational shape (an index is built once and
-    * amortized over every daily batch — same rationale as q111's stats
-    * store fixture). TempDirs-registered for end-of-JVM cleanup. */
-  private val dedupIndexCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** Persisted dedup indexes (q171–q173 and the probes after them) over
+    * the corpus split (doc_id % 5 != 0): the timed bodies are the
+    * incremental batch queries, the operational shape. `docstore` is
+    * what the near-dup verify stage fetches candidate texts from (the
+    * band index stores only ids). `bloom` is the benchmark-set mask
+    * (reference = the src0 slice, q82's construction). `bloomsh` is
+    * the sharded mask, deliberately over-full for one mask (mBits =
+    * 2048 vs ~1.4k distinct src0 grams ≈ 5.4k positions: single-mask
+    * fill ≈ 0.93 → FP ≈ 75%; per-shard fill ≈ 0.49 → FP ≈ 5%), so
+    * q189's FP-for-FP oracle checks the shard routing itself, not just
+    * membership. */
   private def dedupIndexes(s: SparkSession, dir: String): String =
-    dedupIndexCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_dedupidx_${java.util.UUID.randomUUID()}")
+    fixture("dedupidx", dir) { root =>
       val corpus = t(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(5)) =!= 0)
       operators.DedupIndex.writeAnchorIndex(corpus, "text", "doc_id",
@@ -124,320 +143,181 @@ object SparkEntry {
         s"$root/minhash", k = 64, bands = 16, shingleN = 3)
       operators.DedupIndex.writeExactIndex(corpus, "text", "doc_id",
         s"$root/exact")
-      // round 15: the doc store the near-dup VERIFY stage fetches
-      // candidate corpus texts from (the band index stores only ids) —
-      // maintained alongside the index, fetched by candidate-id
-      // semi-join, never corpus-scanned
       corpus.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$root/docstore")
-      // round 15: the benchmark-set bloom mask (reference = the src0
-      // slice, q82's construction) persisted once — batches probe it at
-      // zero reference-side cost
-      operators.DedupIndex.writeBloomIndex(
-        t(s, dir, "documents").filter(col("source") === "src0"),
-        "text", "doc_id", s"$root/bloom", n = 3)
-      // round 16: the SHARDED mask (the scale path writeBloomIndex
-      // documents) — deliberately sized over-full for ONE mask
-      // (mBits = 2048 vs ~1.4k distinct src0 grams ≈ 5.4k positions:
-      // single-mask fill ≈ 0.93 → FP ≈ 75%; per-shard fill ≈ 0.49 →
-      // FP ≈ 5%) so q189's FP-for-FP oracle exercises the shard
-      // routing itself, not just membership
-      operators.DedupIndex.writeBloomIndexSharded(
-        t(s, dir, "documents").filter(col("source") === "src0"),
-        "text", "doc_id", s"$root/bloomsh", n = 3, shards = 4,
-        mBits = 2048)
-      root
-    })
+      val ref = t(s, dir, "documents").filter(col("source") === "src0")
+      operators.DedupIndex.writeBloomIndex(ref, "text", "doc_id",
+        s"$root/bloom", n = 3)
+      operators.DedupIndex.writeBloomIndexSharded(ref, "text", "doc_id",
+        s"$root/bloomsh", n = 3, shards = 4, mBits = 2048)
+    }
 
-  /** Per-sf-dir persisted ANN index fixture (round 14, q176): q102's
-    * IVF-PQ corpus structure — mod-seeded centroids, fixed-cell
-    * codebook, two-level assignment fused with the PQ codes and laid
-    * out partitionBy(cid) — built ONCE; the timed body is the query
-    * batch served against it (the operational split: index build is
-    * offline and corpus-proportional, serving is probed-fraction).
-    * TempDirs-registered for end-of-JVM cleanup. */
-  private val annIndexCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q102's coarse quantizer: the √N-seeded centroids
+    * (vec_id % ⌈√N⌉ == 0). */
+  private def centroids(emb: DataFrame): DataFrame =
+    emb.filter(pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+
+  /** q102's IVF-PQ quantizer: [[centroids]] plus the fixed-cell m = 8
+    * codebook, whose seedMod derives as N/256 so the encode stage stays
+    * data-linear (a fixed mod made the codebook grow with N). */
+  private def quantizer(emb: DataFrame): (DataFrame, DataFrame) =
+    (centroids(emb), Similarity.pqCodebook(emb, m = 8))
+
+  /** Persist the m = 8, dim = 64 IVF-PQ index over `corpus` at `root`,
+    * quantized from the full embeddings table `emb`. Every ANN fixture
+    * builds this way, so serving over it is byte-identical to the
+    * in-memory q102 operator over the same corpus. */
+  private def writeAnn(emb: DataFrame, corpus: DataFrame, root: String,
+      twoLevel: Boolean = true): Unit = {
+    val (cents, cb) = quantizer(emb)
+    operators.AnnIndex.writeIvfPqIndex(corpus, cents, cb, m = 8, dim = 64,
+      root, twoLevel)
+  }
+
+  /** q102's 8-query batch (vec_id < 8) served top-5 at nProbe = 2 from
+    * the persisted index at `root`. */
+  private def serveAnn(s: SparkSession, dir: String, root: String,
+      twoLevel: Boolean = true): DataFrame =
+    operators.AnnIndex.queryIvfPqIndex(
+        t(s, dir, "embeddings").filter(col("vec_id") < 8), root,
+        m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = twoLevel)
+      .withColumn("rank", col("rank").cast("long"))
+      .orderBy("qid", "rank")
+
+  /** q176's index: q102's corpus structure, two-level assignment fused
+    * with the PQ codes, laid out partitionBy(cid). */
   private def annIndex(s: SparkSession, dir: String): String =
-    annIndexCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annidx_${java.util.UUID.randomUUID()}")
+    fixture("annidx", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(emb, cents, cb, m = 8, dim = 64,
-        root, twoLevel = true)
-      root
-    })
+      writeAnn(emb, emb, root)
+    }
 
-  /** Per-sf-dir APPEND-grown ANN index fixture (round 15, q179): the
-    * index is built over the BASE era only (vec_id % 5 != 0) and the
-    * remaining 20% arrives as an [[operators.AnnIndex.appendToIvfPqIndex]]
-    * batch encoded against the persisted frozen centroids/codebook —
-    * the daily-ingest shape. Centroids/codebook are derived exactly as
-    * [[annIndex]]'s, so serving over base + appends must be
-    * byte-identical to the one-shot index AND to the in-memory q102
-    * operator — the q179 oracle (q102's verbatim) isolates the append
-    * path: any divergence in the appended codes or list routing breaks
-    * the hash. TempDirs-registered for end-of-JVM cleanup. */
-  private val annAppendCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q179's index: built over the base era (vec_id % 5 != 0); the other
+    * 20% arrives as an [[operators.AnnIndex.appendToIvfPqIndex]] batch
+    * encoded against the persisted centroids/codebook. q179's oracle is
+    * q102's verbatim, so any divergence in the appended codes or list
+    * routing breaks the hash. */
   private def annAppendIndex(s: SparkSession, dir: String): String =
-    annAppendCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annappend_${java.util.UUID.randomUUID()}")
+    fixture("annappend", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, cb,
-        m = 8, dim = 64, root, twoLevel = true)
+      writeAnn(emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), root)
       operators.AnnIndex.appendToIvfPqIndex(
         emb.filter(pmod(col("vec_id"), lit(5)) === 0), root,
         m = 8, dim = 64, twoLevel = true)
-      root
-    })
+    }
 
-  /** Per-sf-dir ADMISSION ANN index fixture (round 15, q185): the
-    * IVF-PQ structure with the CORPUS restricted to vec_id >= 16 —
-    * centroids/codebook still derive from the full table (the
-    * train-time view), so the q185 oracle's cents/cb CTEs stay the
-    * generators' defaults while codes cover only the corpus the batch
-    * is admitted against. TempDirs-registered for end-of-JVM cleanup. */
-  private val annAdmitCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q185's index: codes cover only the corpus the batch is admitted
+    * against (vec_id >= 16), while the quantizer derives from the full
+    * table, so the oracle's cents/cb CTEs stay the generators'
+    * defaults. */
   private def annAdmitIndex(s: SparkSession, dir: String): String =
-    annAdmitCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annadmit_${java.util.UUID.randomUUID()}")
+    fixture("annadmit", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(col("vec_id") >= 16), cents, cb,
-        m = 8, dim = 64, root, twoLevel = true)
-      root
-    })
+      writeAnn(emb, emb.filter(col("vec_id") >= 16), root)
+    }
 
-  /** Per-sf-dir TOMBSTONED ANN index fixture (round 16, q188): the full
-    * q176 index with the vec_id % 7 == 3 slice taken down via
-    * [[operators.AnnIndex.deleteVectors]] — deletion is part of the
-    * fixture (built once); the timed body is the tombstone-filtered
-    * serve, whose oracle is q102's grammar restricted to the SURVIVING
-    * nids, so the hash matches iff the anti-join excludes exactly the
-    * deleted set and nothing else. TempDirs-registered for cleanup. */
-  private val annTombCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q188's index: q176's with the vec_id % 7 == 3 slice taken down by
+    * [[operators.AnnIndex.deleteVectors]]. The oracle is q102's grammar
+    * over the surviving nids, so the hash matches iff the anti-join
+    * excludes exactly the deleted set. */
   private def annTombIndex(s: SparkSession, dir: String): String =
-    annTombCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_anntomb_${java.util.UUID.randomUUID()}")
+    fixture("anntomb", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(emb, cents, cb, m = 8, dim = 64,
-        root, twoLevel = true)
+      writeAnn(emb, emb, root)
       operators.AnnIndex.deleteVectors(
         emb.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), root)
-      root
-    })
+    }
 
-  /** Per-sf-dir STREAM-grown ANN index fixture (round 15, q183): base
-    * index over 80%, the rest arrives through a real file-source
-    * streaming query and lands as exactly-once `codes_stream/` codes
-    * ([[operators.AnnIndex.streamIvfPqIngest]] — partition overwrite
-    * per ingest batch, so replays rewrite rather than duplicate, which
-    * the q179 batch-append path cannot offer). Same frozen
-    * centroids/codebook derivation as [[annIndex]], so serving over
-    * base + streamed codes must hash-match q102's oracle verbatim —
-    * byte-identity of the STREAMING encode path. Re-running the stream
-    * against its checkpoint is a no-op (AvailableNow, exactly-once
-    * file source), so the cached fixture is stable across bench
-    * passes. TempDirs-registered for end-of-JVM cleanup. */
-  private val annStreamCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** A base index over 80% at `root`; the other 20% arrives through a
+    * real file-source streaming query as exactly-once `codes_stream/`
+    * codes ([[operators.AnnIndex.streamIvfPqIngest]]: partition
+    * overwrite per ingest batch, so replays rewrite rather than
+    * duplicate). Re-running the stream against its checkpoint is a
+    * no-op (AvailableNow, exactly-once file source). */
+  private def streamGrownAnn(s: SparkSession, dir: String, root: String): Unit = {
+    val emb = t(s, dir, "embeddings")
+    writeAnn(emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), root)
+    operators.AnnIndex.streamIvfPqIngest(
+      tableStream(s, dir, "embeddings").filter(pmod(col("vec_id"), lit(5)) === 0),
+      root, m = 8, dim = 64, twoLevel = true)
+  }
+
+  /** q183's index: [[streamGrownAnn]]. Its oracle is q102's verbatim,
+    * so this checks the streaming encode path byte for byte. */
   private def annStreamIndex(s: SparkSession, dir: String): String =
-    annStreamCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annstream_${java.util.UUID.randomUUID()}")
-      val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, cb,
-        m = 8, dim = 64, root, twoLevel = true)
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val tablePath = s"$dir/embeddings.parquet"
-      val stream = (if (new java.io.File(tablePath).isDirectory)
-          s.readStream.schema(schema).parquet(tablePath)
-        else s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .filter(pmod(col("vec_id"), lit(5)) === 0)
-      operators.AnnIndex.streamIvfPqIngest(stream, root, m = 8, dim = 64,
-        twoLevel = true)
-      root
-    })
+    fixture("annstream", dir)(streamGrownAnn(s, dir, _))
 
-  /** Per-sf-dir FOLDED stream-grown ANN index fixture (round 17, q196):
-    * q183's construction — base index over 80%, the rest arriving
-    * through the exactly-once streaming encode into `codes_stream/` —
-    * followed by [[operators.AnnIndex.foldStreamIntoCodes]]: the
-    * streamed partitions retire into the base `cid=` layout under the
-    * marker protocol, restoring single-branch pruned serving. Serving
-    * must stay byte-identical through the fold, so q196's oracle is
-    * q102's VERBATIM (exactly like q183's). Cached per (sf dir, JVM);
-    * re-running the stream against its carried checkpoint is a no-op,
-    * so the folded fixture is stable across bench passes. */
-  private val annFoldCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q196's index: [[streamGrownAnn]], then
+    * [[operators.AnnIndex.foldStreamIntoCodes]] retires the streamed
+    * partitions into the base `cid=` layout. Serving must stay
+    * byte-identical through the fold (oracle: q102's verbatim). */
   private def annFoldIndex(s: SparkSession, dir: String): String =
-    annFoldCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annfold_${java.util.UUID.randomUUID()}")
-      val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, cb,
-        m = 8, dim = 64, root, twoLevel = true)
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val tablePath = s"$dir/embeddings.parquet"
-      val stream = (if (new java.io.File(tablePath).isDirectory)
-          s.readStream.schema(schema).parquet(tablePath)
-        else s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .filter(pmod(col("vec_id"), lit(5)) === 0)
-      operators.AnnIndex.streamIvfPqIngest(stream, root, m = 8, dim = 64,
-        twoLevel = true)
+    fixture("annfold", dir) { root =>
+      streamGrownAnn(s, dir, root)
       operators.AnnIndex.foldStreamIntoCodes(s, root)
-      root
-    })
+    }
 
-  /** Per-sf-dir HOT-SPLIT ANN index fixture (round 17, q195): a
-    * SINGLE-LEVEL IVF-PQ index over the embeddings gets 300 planted
-    * re-embeddings of vector 0 appended through the frozen quantizer
-    * (ids 10⁹+i — the drift clump piles into vector 0's list and trips
-    * the 4× hot factor at every sf), then ONE
-    * [[operators.AnnIndex.splitHotLists]] call locally re-clusters the
-    * hot list: children seeded at its two smallest member ids, the
-    * parent centroid retires, codes rows move (PQ codes unchanged).
-    * The timed body serves a query batch at nProbe=2 against the
-    * post-split structure; the oracle re-derives EVERYTHING — plant,
-    * assignment, hot detection, seeding, child allocation, local
-    * re-assignment, post-split probe — from first principles. Cached
-    * per (sf dir, JVM): the split is deterministic. */
-  private val annSplitCache = scala.collection.concurrent.TrieMap[String, String]()
-  private def annSplitIndex(s: SparkSession, dir: String): String =
-    annSplitCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_annsplit_${java.util.UUID.randomUUID()}")
-      val store = TempDirs.register(s"$root-store")
-      val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(emb, cents, cb, m = 8, dim = 64,
-        root, twoLevel = false)
-      val planted = s.range(300)
-        .select((col("id") + 1000000000L).as("vec_id"))
-        .crossJoin(broadcast(emb.filter(col("vec_id") === 0)
-          .select(col("embedding"))))
-      operators.AnnIndex.appendToIvfPqIndex(planted, root, m = 8,
-        dim = 64, twoLevel = false)
-      emb.select(col("vec_id"), col("embedding"))
-        .unionByName(planted.select(col("vec_id"), col("embedding")))
-        .write.mode("overwrite").parquet(store)
-      operators.AnnIndex.splitHotLists(s, store, root, m = 8, dim = 64,
-        hotFactorBp = 40000L, splitInto = 2)
-      root
-    })
+  /** Plant a drift clump in the index at `root`: 300 re-embeddings of
+    * vector 0 (ids 10⁹ + i) appended through the frozen quantizer. The
+    * clump piles into vector 0's list and trips the 4× hot factor at
+    * every sf. The vector store the split reads, the table plus the
+    * clump, goes to `<root>-store`. Returns the clump and the store. */
+  private def plantClump(s: SparkSession, emb: DataFrame, root: String,
+      twoLevel: Boolean): (DataFrame, String) = {
+    val planted = s.range(300)
+      .select((col("id") + 1000000000L).as("vec_id"))
+      .crossJoin(broadcast(emb.filter(col("vec_id") === 0)
+        .select(col("embedding"))))
+    operators.AnnIndex.appendToIvfPqIndex(planted, root, m = 8,
+      dim = 64, twoLevel = twoLevel)
+    val store = TempDirs.register(s"$root-store")
+    emb.select(col("vec_id"), col("embedding"))
+      .unionByName(planted.select(col("vec_id"), col("embedding")))
+      .write.mode("overwrite").parquet(store)
+    (planted, store)
+  }
 
-  /** Per-sf-dir TWO-LEVEL HOT-SPLIT fixture (round 18, q198): q195's
-    * construction at twoLevel = true — possible since the build
-    * PERSISTS the super set (`supers/`), freezing the routing anchors
-    * like the centroids/codebook. The split's children enter exactly
-    * one super's group (the centroid→super map re-derives over the
-    * post-split centroid relation against the frozen supers); every
-    * other group's probes are untouched — the round-17 rejection
-    * (rank-derived supers shifting under the new centroid set) no
-    * longer applies. Cached per (sf dir, JVM). */
-  private val annTlSplitCache = scala.collection.concurrent.TrieMap[String, String]()
-  private def annTlSplitIndex(s: SparkSession, dir: String): String =
-    annTlSplitCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_anntlsplit_${java.util.UUID.randomUUID()}")
-      val store = TempDirs.register(s"$root-store")
+  /** q195's (single-level) and q198's (two-level) index: the full
+    * index plus [[plantClump]], then ONE
+    * [[operators.AnnIndex.splitHotLists]] call re-clusters the hot list:
+    * children seeded at its two smallest member ids, the parent
+    * centroid retires, codes rows move (PQ codes unchanged). Two-level
+    * works because the build persists the super set (`supers/`): the
+    * children enter exactly one super's group and every other group's
+    * probes are untouched. The oracles re-derive plant, assignment, hot
+    * detection, seeding, child allocation, local re-assignment and the
+    * post-split probe from first principles. */
+  private def annSplitIndex(s: SparkSession, dir: String,
+      twoLevel: Boolean): String =
+    fixture(if (twoLevel) "anntlsplit" else "annsplit", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(emb, cents, cb, m = 8, dim = 64,
-        root, twoLevel = true)
-      val planted = s.range(300)
-        .select((col("id") + 1000000000L).as("vec_id"))
-        .crossJoin(broadcast(emb.filter(col("vec_id") === 0)
-          .select(col("embedding"))))
-      operators.AnnIndex.appendToIvfPqIndex(planted, root, m = 8,
-        dim = 64, twoLevel = true)
-      emb.select(col("vec_id"), col("embedding"))
-        .unionByName(planted.select(col("vec_id"), col("embedding")))
-        .write.mode("overwrite").parquet(store)
+      writeAnn(emb, emb, root, twoLevel)
+      val (_, store) = plantClump(s, emb, root, twoLevel)
       val rep = operators.AnnIndex.splitHotLists(s, store, root, m = 8,
         dim = 64, hotFactorBp = 40000L, splitInto = 2)
       require(rep.count() > 0,
-        "q198 fixture: the planted clump did not trip the hot rule")
-      root
-    })
+        "hot-split fixture: the planted clump did not trip the hot rule")
+    }
 
-  /** Per-sf-dir MAINTENANCE-TICK fixture (round 18, q197): q195's
-    * single-level geometry accumulates ALL THREE debt kinds — the
-    * planted drift clump (split debt), the 20% slice arriving as a
-    * stream ingest batch (fold debt), and a vec_id ≡ 9 (mod 50)
-    * takedown (compaction debt) — then ONE
-    * [[operators.Maintenance.maintenanceTick]] call decides and
-    * performs fold → compact → split in order. The timed query serves
-    * the post-tick structure; the oracle is q195's full split
-    * re-derivation over the SURVIVOR set, so the hash matches iff the
-    * autopilot ordered and executed all three actions exactly as the
-    * hand-called operators would. Cached per (sf dir, JVM): every step
-    * is deterministic. */
-  private val annTickCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** q197's index: q195's single-level geometry over 80% accumulates all
+    * three debt kinds: the planted clump (split debt), the other 20% as
+    * an unfolded ingest batch (fold debt; the streaming wrapper is
+    * q183/q196's path) and a vec_id ≡ 9 (mod 50) takedown, clump
+    * included (compaction debt). Then ONE
+    * [[operators.Maintenance.maintenanceTick]] must fold → compact →
+    * split in that order. The oracle is q195's split re-derivation over
+    * the survivors, so the hash matches iff the tick ordered and ran all
+    * three actions as the hand-called operators would. */
   private def annTickIndex(s: SparkSession, dir: String): String =
-    annTickCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_anntick_${java.util.UUID.randomUUID()}")
-      val store = TempDirs.register(s"$root-store")
+    fixture("anntick", dir) { root =>
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, cb,
-        m = 8, dim = 64, root, twoLevel = false)
-      val planted = s.range(300)
-        .select((col("id") + 1000000000L).as("vec_id"))
-        .crossJoin(broadcast(emb.filter(col("vec_id") === 0)
-          .select(col("embedding"))))
-      operators.AnnIndex.appendToIvfPqIndex(planted, root, m = 8,
-        dim = 64, twoLevel = false)
-      // fold debt: the 20% slice lands as an ingest batch (the
-      // foreachBatch body — the streaming wrapper is q183/q196's path)
+      writeAnn(emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), root,
+        twoLevel = false)
+      val (planted, store) = plantClump(s, emb, root, twoLevel = false)
       operators.AnnIndex.ingestVecBatch(
         emb.filter(pmod(col("vec_id"), lit(5)) === 0), 0L, root,
         m = 8, dim = 64, twoLevel = false, "vec_id", "embedding")
-      emb.select(col("vec_id"), col("embedding"))
-        .unionByName(planted.select(col("vec_id"), col("embedding")))
-        .write.mode("overwrite").parquet(store)
-      // compaction debt: a takedown of vec_id ≡ 9 (mod 50), plant included
       operators.AnnIndex.deleteVectors(
         emb.select(col("vec_id"))
           .unionByName(planted.select(col("vec_id")))
@@ -449,11 +329,9 @@ object SparkEntry {
       require(actions == Seq(("fold", true), ("compact", true),
           ("split", true)),
         s"q197 fixture: tick was expected to fold+compact+split, did $actions")
-      root
-    })
+    }
 
-  /** Construct independent probe relations in parallel driver threads
-    * (optimization round 18, guide §2.6 "overlap independent jobs"):
+  /** Construct independent probe relations in parallel driver threads:
     * each construction runs eager metadata / materialization work
     * (probeHint stats, the LSH candidate localCheckpoint, meta checks)
     * that otherwise serializes on the driver while executors idle. The
@@ -466,11 +344,11 @@ object SparkEntry {
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     try {
-      // unbounded wait + await-all-before-rethrow (round 19, ADVICE —
-      // same contract as FanOut.inParallel): a construction that runs
-      // eager corpus-sized work must not die at an arbitrary timeout the
-      // sequential code never had, and the first failure must not leave
-      // sibling constructions racing a caller's cleanup/retry
+      // unbounded wait + await-all-before-rethrow (the FanOut.inParallel
+      // contract): a construction that runs eager corpus-sized work must
+      // not die at an arbitrary timeout the sequential code never had,
+      // and the first failure must not leave sibling constructions
+      // racing a caller's cleanup/retry
       val fs = thunks.map(th => Future(th()))
       val outcomes = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       outcomes.collectFirst { case scala.util.Failure(e) => throw e }
@@ -478,54 +356,63 @@ object SparkEntry {
     } finally pool.shutdown()
   }
 
-  /** Per-sf-dir PIPELINE-TICK fixture (round 18, q199): q193's
-    * five-kind pipeline, but the debts are left PENDING (direct
-    * deleteDocs/deleteVectors, ids ≡ 3 mod 20 — NOT a Takedown, whose
-    * phase 2 would do the rebuilds itself) plus an unfolded ANN stream
-    * batch — then ONE [[operators.Maintenance.pipelineTick]] call must
-    * compact the row-wise kinds, fold + compact the ANN root,
-    * store-feed-rebuild anchor + bloom, and compact the three stores
-    * LAST (absorbing the rebuilds' propagated tombstones), leaving
-    * zero pending residue. The timed query probes all five surfaces;
-    * the oracle re-derives each over the survivors, so the hash
-    * matches iff the autopilot's ordering and every performed action
-    * equal the hand-called operators'. Cached per (sf dir, JVM). */
-  private val pipeTickCache = scala.collection.concurrent.TrieMap[String, String]()
+  /** The five-kind pipeline's roots under `root`. */
+  private def pipelineRoots(root: String) = operators.PipelineRoots(
+    exactIndex = Some(s"$root/exact"),
+    minhashIndex = Some(s"$root/minhash"),
+    docStore = Some(s"$root/docstore"),
+    anchorIndex = Some(s"$root/anchor"),
+    bloomIndex = Some(s"$root/bloomsh"),
+    refStore = Some(s"$root/refstore"),
+    annIndex = Some(s"$root/ann"),
+    vecStore = Some(s"$root/vecstore"))
+
+  /** Everything of the five-kind pipeline but the ANN index, under
+    * `root`: exact, minhash and anchor indexes and the doc store over
+    * the corpus split (doc_id % 5 != 0), the src0 reference store with
+    * its sharded bloom mask, and the vector store. Returns the documents
+    * and embeddings tables. */
+  private def writePipeline(s: SparkSession, dir: String,
+      root: String): (DataFrame, DataFrame) = {
+    val docs = t(s, dir, "documents")
+    val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+    operators.DedupIndex.writeExactIndex(corpus, "text", "doc_id",
+      s"$root/exact")
+    operators.DedupIndex.writeMinHashIndex(corpus, "text", "doc_id",
+      s"$root/minhash", k = 64, bands = 16, shingleN = 3)
+    operators.DedupIndex.writeAnchorIndex(corpus, "text", "doc_id",
+      s"$root/anchor", k = 3, w = 4)
+    corpus.select(col("doc_id"), col("text"))
+      .write.mode("overwrite").parquet(s"$root/docstore")
+    val ref = docs.filter(col("source") === "src0")
+    ref.select(col("doc_id"), col("text"))
+      .write.mode("overwrite").parquet(s"$root/refstore")
+    operators.DedupIndex.writeBloomIndexSharded(ref, "text", "doc_id",
+      s"$root/bloomsh", n = 3, shards = 4, mBits = 2048)
+    val emb = t(s, dir, "embeddings")
+    emb.write.mode("overwrite").parquet(s"$root/vecstore")
+    (docs, emb)
+  }
+
+  /** q199's pipeline: q193's five kinds, but the debts are left pending
+    * (direct deleteDocs/deleteVectors of ids ≡ 3 mod 20, not a
+    * Takedown, whose phase 2 would do the rebuilds itself) plus an
+    * unfolded ANN ingest batch (the other 20%; assignment parity through
+    * the frozen two-level supers is q196/q198's guarantee). Then ONE
+    * [[operators.Maintenance.pipelineTick]] must compact the row-wise
+    * kinds, fold + compact the ANN root, store-feed-rebuild anchor and
+    * bloom, and compact the three stores last (absorbing the rebuilds'
+    * propagated tombstones). The oracle re-derives each surface over the
+    * survivors, so the hash matches iff every performed action equals
+    * the hand-called operator's. */
   private def pipelineTickFixture(s: SparkSession, dir: String): String =
-    pipeTickCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_pipetick_${java.util.UUID.randomUUID()}")
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      operators.DedupIndex.writeExactIndex(corpus, "text", "doc_id",
-        s"$root/exact")
-      operators.DedupIndex.writeMinHashIndex(corpus, "text", "doc_id",
-        s"$root/minhash", k = 64, bands = 16, shingleN = 3)
-      operators.DedupIndex.writeAnchorIndex(corpus, "text", "doc_id",
-        s"$root/anchor", k = 3, w = 4)
-      corpus.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/docstore")
-      val ref = docs.filter(col("source") === "src0")
-      ref.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/refstore")
-      operators.DedupIndex.writeBloomIndexSharded(ref, "text", "doc_id",
-        s"$root/bloomsh", n = 3, shards = 4, mBits = 2048)
-      val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      // base 80%; the other 20% arrives as an unfolded ingest batch —
-      // assignment parity through the frozen two-level super structure
-      // is q196/q198's proven guarantee
-      operators.AnnIndex.writeIvfPqIndex(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, cb,
-        m = 8, dim = 64, s"$root/ann", twoLevel = true)
+    fixture("pipetick", dir) { root =>
+      val (docs, emb) = writePipeline(s, dir, root)
+      writeAnn(emb, emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
+        s"$root/ann")
       operators.AnnIndex.ingestVecBatch(
         emb.filter(pmod(col("vec_id"), lit(5)) === 0), 0L, s"$root/ann",
         m = 8, dim = 64, twoLevel = true, "vec_id", "embedding")
-      emb.write.mode("overwrite").parquet(s"$root/vecstore")
-      // pending debts, every root: doc ids ≡ 3 (mod 20), vec ids too
       val delDocs = docs.filter(pmod(col("doc_id"), lit(20)) === 3)
         .select(col("doc_id"))
       Seq("exact", "minhash", "anchor", "bloomsh", "docstore", "refstore")
@@ -534,16 +421,7 @@ object SparkEntry {
         .select(col("vec_id"))
       operators.AnnIndex.deleteVectors(delVecs, s"$root/ann")
       operators.AnnIndex.deleteVectors(delVecs, s"$root/vecstore")
-      val actions = operators.Maintenance.pipelineTick(s,
-          operators.PipelineRoots(
-            exactIndex = Some(s"$root/exact"),
-            minhashIndex = Some(s"$root/minhash"),
-            docStore = Some(s"$root/docstore"),
-            anchorIndex = Some(s"$root/anchor"),
-            bloomIndex = Some(s"$root/bloomsh"),
-            refStore = Some(s"$root/refstore"),
-            annIndex = Some(s"$root/ann"),
-            vecStore = Some(s"$root/vecstore")),
+      val actions = operators.Maintenance.pipelineTick(s, pipelineRoots(root),
           policy = operators.Maintenance.TickPolicy(hotFactor = 1000.0))
         .orderBy("seq").collect()
         .map(r => (r.getString(1), r.getBoolean(4))).toSeq
@@ -551,66 +429,94 @@ object SparkEntry {
         "rebuild", "rebuild", "compact", "compact", "compact")
       require(actions == expected.map((_, true)),
         s"q199 fixture: pipelineTick was expected to do $expected, did $actions")
-      root
-    })
+    }
 
-  /** Per-sf-dir ONE-CALL-TAKEDOWN pipeline fixture (round 17, q193):
-    * ALL FIVE index kinds plus their three stores built over the
-    * standard corpus splits, then ONE [[operators.Takedown]] call
-    * removes every id ≡ 1 (mod 20) — document AND vector — across the
-    * whole pipeline: the row-wise kinds (exact, minhash, doc store,
+  /** q193's pipeline: all five index kinds plus their three stores, then
+    * ONE [[operators.Takedown]] call removes every id ≡ 1 (mod 20),
+    * document and vector: the row-wise kinds (exact, minhash, doc store,
     * ANN codes, vector store, reference store) are tombstoned, the
-    * aggregate kinds (anchor grams, sharded bloom masks) are rebuilt
-    * from their stores with the deletions applied. The timed body runs
-    * one probe per surface; the oracle re-derives every status from
-    * the SURVIVING corpus, so the hash matches iff no path anywhere
-    * still serves (or wrongly drops) the deleted content. Cached per
-    * (sf dir, JVM) — the takedown is deterministic, so repeat
-    * invocations probe the same post-takedown state. */
-  private val takedownCache = scala.collection.concurrent.TrieMap[String, String]()
+    * aggregate kinds (anchor grams, sharded bloom masks) rebuilt from
+    * their stores with the deletions applied. The oracle re-derives
+    * every status from the surviving corpus, so the hash matches iff no
+    * path still serves (or wrongly drops) the deleted content. */
   private def takedownPipeline(s: SparkSession, dir: String): String =
-    takedownCache.getOrElseUpdate(dir, {
-      val root = TempDirs.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft_takedown_${java.util.UUID.randomUUID()}")
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      operators.DedupIndex.writeExactIndex(corpus, "text", "doc_id",
-        s"$root/exact")
-      operators.DedupIndex.writeMinHashIndex(corpus, "text", "doc_id",
-        s"$root/minhash", k = 64, bands = 16, shingleN = 3)
-      operators.DedupIndex.writeAnchorIndex(corpus, "text", "doc_id",
-        s"$root/anchor", k = 3, w = 4)
-      corpus.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/docstore")
-      val ref = docs.filter(col("source") === "src0")
-      ref.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$root/refstore")
-      operators.DedupIndex.writeBloomIndexSharded(ref, "text", "doc_id",
-        s"$root/bloomsh", n = 3, shards = 4, mBits = 2048)
-      val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      operators.AnnIndex.writeIvfPqIndex(emb, cents, cb, m = 8, dim = 64,
-        s"$root/ann", twoLevel = true)
-      emb.write.mode("overwrite").parquet(s"$root/vecstore")
+    fixture("takedown", dir) { root =>
+      val (docs, emb) = writePipeline(s, dir, root)
+      writeAnn(emb, emb, s"$root/ann")
       val ids = docs.filter(pmod(col("doc_id"), lit(20)) === 1)
         .select(col("doc_id").as("id"))
         .unionByName(emb.filter(pmod(col("vec_id"), lit(20)) === 1)
           .select(col("vec_id").as("id")))
         .distinct()
-      operators.Takedown(ids, operators.PipelineRoots(
-        exactIndex = Some(s"$root/exact"),
-        minhashIndex = Some(s"$root/minhash"),
-        docStore = Some(s"$root/docstore"),
-        anchorIndex = Some(s"$root/anchor"),
-        bloomIndex = Some(s"$root/bloomsh"),
-        refStore = Some(s"$root/refstore"),
-        annIndex = Some(s"$root/ann"),
-        vecStore = Some(s"$root/vecstore")))
-      root
-    })
+      operators.Takedown(ids, pipelineRoots(root))
+    }
+
+  /** One probe per surface of a five-kind pipeline at `root` (q193's
+    * and q199's timed body): exact admission, verified near-dup
+    * admission, anchored spans, sharded-bloom contamination and the ANN
+    * top-k serve, normalized to (surface, id, a, b, s). */
+  private def probePipeline(s: SparkSession, dir: String, root: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val emb = t(s, dir, "embeddings")
+    val plain = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+    val neigh = docs.select((col("doc_id") - 1).as("doc_id"),
+      col("text").as("_nt"))
+    val exBatch = plain.join(neigh, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(10)) === 0 && col("_nt").isNotNull,
+          col("_nt")).otherwise(col("text")).as("text"))
+    val sib = docs.select((col("doc_id") + 10).as("doc_id"),
+      col("text").as("_bt"))
+    val ndBatch = plain.join(sib, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(pmod(col("doc_id"), lit(20)) === 15 && col("_bt").isNotNull,
+          col("_bt")).otherwise(col("text")).as("text"))
+    val probes = parallelCons(
+      () => operators.DedupIndex.admitAgainstIndex(exBatch, "text",
+        "doc_id", s"$root/exact")
+      .select(lit("exact").as("surface"), col("doc_id").as("id"),
+        col("keep_id").cast("long").as("a"), lit(0L).as("b"),
+        col("status").as("s")),
+      () => operators.DedupIndex.admitNearDupAgainstIndex(ndBatch,
+        "text", "doc_id", s"$root/minhash", s"$root/docstore",
+        k = 64, bands = 16, shingleN = 3, thetaBp = 5000L)
+      .select(lit("neardup").as("surface"), col("doc_id").as("id"),
+        col("keep_id").cast("long").as("a"), lit(0L).as("b"),
+        col("status").as("s")),
+      () => operators.DedupIndex.duplicateSpansAgainstIndex(plain,
+        "text", "doc_id", s"$root/anchor", k = 3, w = 4)
+      .select(lit("spans").as("surface"), col("doc_id").as("id"),
+        col("span_start").cast("long").as("a"),
+        col("span_end").cast("long").as("b"), lit("").as("s")),
+      () => operators.DedupIndex.bloomContaminationAgainstShardedIndex(
+        plain, "text", "doc_id", s"$root/bloomsh", n = 3, shards = 4,
+        mBits = 2048)
+      .select(lit("bloom").as("surface"), col("doc_id").as("id"),
+        col("n_maybe_dirty").cast("long").as("a"),
+        col("contamination_bp").cast("long").as("b"), lit("").as("s")),
+      () => operators.AnnIndex.queryIvfPqIndex(
+        emb.filter(col("vec_id") < 8), s"$root/ann", m = 8, dim = 64,
+        k = 5, nProbe = 2, twoLevel = true)
+      .select(lit("ann").as("surface"), col("qid").as("id"),
+        col("nid").cast("long").as("a"), col("rank").cast("long").as("b"),
+        lit("").as("s")))
+    val Seq(ex, nd, sp, bl, an) = probes: @unchecked
+    ex.unionByName(nd).unionByName(sp).unionByName(bl).unionByName(an)
+      .orderBy("surface", "id", "a", "b")
+  }
+
+  /** q111/q184's timed body: the stats-pruned scan of 20 of the store's
+    * 100 streams over a 10-day window, aggregated per stream. */
+  private def statsPrunedScan(s: SparkSession, out: String): DataFrame = {
+    val stats = s.read.parquet(s"$out-stats")
+    val uuids = (0 until 100 by 5)
+      .map(u => f"00000000-0000-0000-0000-$u%012d")
+    graft.sources.StatsIndex.prunedScan(s, stats, out, uuids,
+        "2024-01-10T00:00:00Z", "2024-01-20T00:00:00Z")
+      .groupBy("uuid")
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
+      .orderBy("uuid")
+  }
 
   /** TPC-H-derived RDF quads in one named graph: customer --p1--> nation
     * --p2--> region. With distinct predicates this is the BGP corpus; with
@@ -1624,20 +1530,14 @@ object SparkEntry {
       // IVF-PQ, the production two-stage ANN: coarse inverted lists
       // (q23's shape) restrict WHICH vectors each query scores; PQ codes
       // (q74's shape) decide HOW — the raw corpus is never re-read after
-      // the two broadcast encode passes. √N-seeded nlist (round 12),
-      // same derivation as q23's quantizer.
+      // the two broadcast encode passes. √N-seeded nlist, same
+      // derivation as q23's quantizer.
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      // fixed-cell codebook (round 13): seedMod derives as N/256, so
-      // the encode stage stays data-linear (a fixed mod measured 346x
-      // wall at 100x data — the codebook itself was growing with N)
-      val cb = Similarity.pqCodebook(emb, m = 8)
-      // two-level coarse assignment (round 13): same hierarchical
-      // quantizer as q23 — the flat corpus × nlist argmax was the one
-      // N^1.5 stage left in the ANN family; round 14 routes the query
-      // probe through the super level too (no √N broadcast anywhere)
+      val (cents, cb) = quantizer(emb)
+      // two-level coarse assignment, the same hierarchical quantizer as
+      // q23: the flat corpus × nlist argmax was the one N^1.5 stage left
+      // in the ANN family; the query probe routes through the super
+      // level too (no √N broadcast anywhere)
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8), cents, cb,
           m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
         .withColumn("rank", col("rank").cast("long"))
@@ -1722,7 +1622,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "q174_stream_dedup_ingest" -> ((s, dir) => {
-      // §2.9 × round-14 index story: STREAMING dedup-ingest — documents
+      // §2.9 × the persisted index: STREAMING dedup-ingest — documents
       // arrive through a real file-source streaming query, each
       // micro-batch is admitted against the persisted exact index
       // (dup_corpus / dup_batch / admitted per doc), admitted keys are
@@ -1738,24 +1638,12 @@ object SparkEntry {
       // mutate). Single AvailableNow batch here = deterministic,
       // oracle-able; cross-batch admission is spec-tested with explicit
       // multi-batch runs (DedupIndexSpec).
-      val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_q174_${java.util.UUID.randomUUID()}")
+      val root = freshRoot("q174")
       val docs = t(s, dir, "documents")
       operators.DedupIndex.writeExactIndex(
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "text", "doc_id",
         s"$root/exact")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      // stream source by table SHAPE: a directory-shaped table (the
-      // scale-probe builds, any real warehouse) streams by its path —
-      // the dir+pathGlobFilter form matches leaf FILE names and would
-      // silently see ZERO input files; a flat single-file table (the
-      // sf fixtures) must keep the glob-filter form because the file
-      // source requires a directory basePath
-      val tablePath = s"$dir/documents.parquet"
-      val stream = (if (new java.io.File(tablePath).isDirectory)
-          s.readStream.schema(schema).parquet(tablePath)
-        else s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      val stream = tableStream(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(5)) === 0)
       val neigh = docs.select((col("doc_id") - 1).as("doc_id"),
         col("text").as("_nt"))
@@ -1798,7 +1686,7 @@ object SparkEntry {
         .orderBy("qid", "rank")
     }),
     "q176_ann_index_serve" -> ((s, dir) => {
-      // PERSISTED ANN index + query serving (round 14) — q102's IVF-PQ
+      // PERSISTED ANN index + query serving — q102's IVF-PQ
       // retrieval split into its operational halves: the corpus-side
       // structure is a parquet index built once (cached fixture, like
       // q111's stats store and q171's dedup indexes), and the timed
@@ -1807,12 +1695,7 @@ object SparkEntry {
       // lists (partitionBy(cid) layout → dynamic partition pruning),
       // no corpus re-encode, no raw-vector re-read. Byte-identical to
       // q102's in-memory operator, so the oracle is q102's verbatim.
-      val root = annIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annIndex(s, dir))
     }),
     "q178_ann_serve_rerank" -> ((s, dir) => {
       // the COMPLETE production serving stack (round 14): persisted
@@ -1832,7 +1715,7 @@ object SparkEntry {
         .orderBy("qid", "rank")
     }),
     "q177_ivfpq_residual" -> ((s, dir) => {
-      // residual IVF-PQ (round 14) — the PRODUCTION encoding: PQ codes
+      // residual IVF-PQ — the PRODUCTION encoding: PQ codes
       // over each vector's residual to its assigned centroid (v − c),
       // query tables per probed list from (q − c). Residuals
       // concentrate the energy the coarse stage already explained, so
@@ -1841,16 +1724,13 @@ object SparkEntry {
       // subtractions and all distances integer fixed-point, so the
       // oracle re-derives identical codes and scores.
       val emb = t(s, dir, "embeddings")
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       Similarity.ivfPqResidualTopK(emb, emb.filter(col("vec_id") < 8),
-          cents, m = 8, dim = 64, k = 5, nProbe = 2)
+          centroids(emb), m = 8, dim = 64, k = 5, nProbe = 2)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("qid", "rank")
     }),
     "q179_ann_index_append" -> ((s, dir) => {
-      // APPEND-grown ANN index (round 15): the index was built over 80%
+      // APPEND-grown ANN index: the index was built over 80%
       // of the corpus and the rest appended against the persisted
       // frozen centroids/codebook (cost ∝ batch: two broadcast joins,
       // new files under the existing codes/cid= partitions — see the
@@ -1858,12 +1738,7 @@ object SparkEntry {
       // batch as q176; the oracle is q102's VERBATIM, so the hash
       // matches iff append-encoded codes and list routing are
       // byte-identical to a full one-shot build over the union corpus.
-      val root = annAppendIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annAppendIndex(s, dir))
     }),
     "q180_neardup_admit" -> ((s, dir) => {
       // NEAR-dup admission against the persisted band index (round 15 —
@@ -1896,7 +1771,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "q181_stream_neardup_ingest" -> ((s, dir) => {
-      // §2.9 × round-15: STREAMING near-dup ingest — q174's file-source
+      // §2.9: STREAMING near-dup ingest — q174's file-source
       // pipeline with kind=minhash: each micro-batch is admitted by
       // LSH-candidates → exact-Jaccard verify against the CURRENT band
       // index + doc store, and admitted docs' band rows AND texts are
@@ -1909,8 +1784,7 @@ object SparkEntry {
       // appends — the shared fixture must not mutate). Single
       // AvailableNow batch = deterministic; multi-batch admission is
       // spec-tested (DedupIndexSpec).
-      val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_q181_${java.util.UUID.randomUUID()}")
+      val root = freshRoot("q181")
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       operators.FanOut.inParallel(
@@ -1918,12 +1792,7 @@ object SparkEntry {
           "doc_id", s"$root/minhash", k = 64, bands = 16, shingleN = 3),
         () => corpus.select(col("doc_id"), col("text"))
           .write.parquet(s"$root/docstore"))
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val tablePath = s"$dir/documents.parquet"
-      val stream = (if (new java.io.File(tablePath).isDirectory)
-          s.readStream.schema(schema).parquet(tablePath)
-        else s.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      val stream = tableStream(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(5)) === 0)
       val neigh = docs.select((col("doc_id") - 1).as("doc_id"),
         col("text").as("_nt"))
@@ -1974,7 +1843,7 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
     "q186_stream_embed_ingest" -> ((s, dir) => {
-      // §2.9 × round-15 semantic ingest: q185's admission THROUGH a real
+      // §2.9 semantic ingest: q185's admission THROUGH a real
       // file-source streaming query — per micro-batch semantic near-dup
       // admission against the current ANN index + vector store, admitted
       // vectors extending both exactly-once/append between batches. Same
@@ -1983,25 +1852,14 @@ object SparkEntry {
       // AvailableNow batch = deterministic; multi-batch cross-admission
       // is spec-tested. Index + store built fresh per invocation (the
       // stream appends — the shared q185 fixture must not mutate).
-      val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_q186_${java.util.UUID.randomUUID()}")
+      val root = freshRoot("q186")
       val emb = t(s, dir, "embeddings")
       val corpus = emb.filter(col("vec_id") >= 16)
-      val cents = emb.filter(
-          pmod(col("vec_id"), lit(Similarity.autoCentroidMod(emb))) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val cb = Similarity.pqCodebook(emb, m = 8)
       operators.FanOut.inParallel(
-        () => operators.AnnIndex.writeIvfPqIndex(corpus, cents, cb, m = 8,
-          dim = 64, s"$root/ann", twoLevel = true),
+        () => writeAnn(emb, corpus, s"$root/ann"),
         () => corpus.select(col("vec_id"), col("embedding"))
           .write.parquet(s"$root/store"))
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val tablePath = s"$dir/embeddings.parquet"
-      val stream = (if (new java.io.File(tablePath).isDirectory)
-          s.readStream.schema(schema).parquet(tablePath)
-        else s.readStream.schema(schema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
+      val stream = tableStream(s, dir, "embeddings")
         .filter(col("vec_id") < 16)
       val repl = emb.filter(col("vec_id").between(100, 107))
         .select((col("vec_id") - 92).as("vec_id"),
@@ -2018,7 +1876,7 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
     "q184_stats_refresh_scan" -> ((s, dir) => {
-      // S5 maintained INCREMENTALLY (round 15): the q111 store written
+      // S5 maintained INCREMENTALLY: the q111 store written
       // in two eras — stats built over era 0, era 1 landing later as
       // appended fragments that StatsIndex.refresh picks up at
       // new-files-only cost (listing + fragment scan, never a store
@@ -2026,18 +1884,10 @@ object SparkEntry {
       // from the refresh-maintained table; the oracle recomputes from
       // raw events, so a refresh that misses a new fragment (wrong
       // counts) or resurrects a stale row breaks the hash.
-      val out = statsRefreshStoreFor(s, dir)
-      val stats = s.read.parquet(s"$out-stats")
-      val uuids = (0 until 100 by 5)
-        .map(u => f"00000000-0000-0000-0000-$u%012d")
-      graft.sources.StatsIndex.prunedScan(s, stats, out, uuids,
-          "2024-01-10T00:00:00Z", "2024-01-20T00:00:00Z")
-        .groupBy("uuid")
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .orderBy("uuid")
+      statsPrunedScan(s, statsStore(s, dir, refresh = true))
     }),
     "q183_ann_stream_ingest" -> ((s, dir) => {
-      // §2.9 × round-15 ANN story: STREAMING vector ingest — q179's
+      // §2.9 × the ANN index: STREAMING vector ingest — q179's
       // 20% split arrives through a real file-source streaming query
       // and is encoded exactly-once into codes_stream/ (per-batch
       // partition overwrite — replays rewrite, never duplicate; the
@@ -2046,12 +1896,7 @@ object SparkEntry {
       // branches, one ranker); oracle = q102's VERBATIM, so the hash
       // matches iff the streaming encode path is byte-identical to a
       // one-shot build over the union.
-      val root = annStreamIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annStreamIndex(s, dir))
     }),
     "q182_bloom_index_probe" -> ((s, dir) => {
       // PERSISTED decontamination bloom mask + batch probe (round 15):
@@ -2082,8 +1927,7 @@ object SparkEntry {
       // alive) stay dup_corpus. The oracle re-derives the admission
       // rule over the surviving keeper set, so the hash matches iff
       // the tombstone anti-join excludes exactly the deleted keepers.
-      val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_q187_${java.util.UUID.randomUUID()}")
+      val root = freshRoot("q187")
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       operators.DedupIndex.writeExactIndex(corpus, "text", "doc_id",
@@ -2105,19 +1949,14 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "q188_ann_tombstone_serve" -> ((s, dir) => {
-      // ANN takedown (round 16): q176's serve over an index whose
+      // ANN takedown: q176's serve over an index whose
       // vec_id % 7 == 3 slice was deleted (cached fixture — the
       // tombstone write is index maintenance, the timed body is the
       // filtered serve: one broadcast anti-join on the scored pairs).
       // Oracle = q102's grammar restricted to surviving nids, so the
       // hash matches iff served top-k equals a physically-rebuilt
       // survivor index's — deletion changes results, not just rows.
-      val root = annTombIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annTombIndex(s, dir))
     }),
     "q189_bloom_sharded_probe" -> ((s, dir) => {
       // SHARDED decontamination mask (round 16): q182's probe against
@@ -2182,21 +2021,16 @@ object SparkEntry {
         .orderBy("cid")
     }),
     "q196_ann_fold_serve" -> ((s, dir) => {
-      // STREAM-FOLD (round 17): q183's stream-grown index with the
+      // STREAM-FOLD: q183's stream-grown index with the
       // codes_stream partitions RETIRED into the base cid= layout
       // (foldStreamIntoCodes — marker-protocol swap, no crash point
       // double-counts or loses a streamed row). Serving is back to ONE
       // partition-pruned scan branch; oracle = q102's VERBATIM, so the
       // hash matches iff the fold preserved every code row exactly.
-      val root = annFoldIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annFoldIndex(s, dir))
     }),
     "q195_ann_hot_split" -> ((s, dir) => {
-      // HOT-LIST SPLIT (round 17): serving against the post-split
+      // HOT-LIST SPLIT: serving against the post-split
       // structure — the list-proportional rebalance between full
       // re-train cutovers (see annSplitIndex: a planted drift clump
       // trips the 4× hot factor; splitHotLists re-clusters ONLY that
@@ -2205,31 +2039,21 @@ object SparkEntry {
       // so the hash matches iff detection, seeding, child-id
       // allocation, local re-assignment AND the post-split probe all
       // agree exactly.
-      val root = annSplitIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = false)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annSplitIndex(s, dir, twoLevel = false), twoLevel = false)
     }),
     "q198_ann_twolevel_split" -> ((s, dir) => {
-      // TWO-LEVEL HOT-SPLIT (round 18): the production-scale geometry
+      // TWO-LEVEL HOT-SPLIT: the production-scale geometry
       // (two-level = the ~N^¼-broadcast configuration) gets the local
       // rebalance too — sound because the build persists the super set,
       // so the split's children enter one frozen super's group and no
-      // unrelated probe re-routes (see annTlSplitIndex). The oracle
+      // unrelated probe re-routes (see annSplitIndex). The oracle
       // re-derives supers from the ORIGINAL centroid set, the baked
       // two-level assignment, the whole split, and the post-split
       // two-level probe over the re-derived centroid→super map.
-      val root = annTlSplitIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = true)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annSplitIndex(s, dir, twoLevel = true))
     }),
     "q197_maintenance_tick_serve" -> ((s, dir) => {
-      // MAINTENANCE AUTOPILOT (round 18): an index with all three debt
+      // MAINTENANCE AUTOPILOT: an index with all three debt
       // kinds — unfolded stream batch, pending takedown tombstones, a
       // hot drift clump — resolved by ONE maintenanceTick call (fold →
       // compact → split, decided and ordered by the tick; see
@@ -2237,12 +2061,7 @@ object SparkEntry {
       // split grammar over the SURVIVORS: the hash matches iff the
       // autopilot's ordering and each performed action are exactly the
       // hand-called operators' semantics.
-      val root = annTickIndex(s, dir)
-      val emb = t(s, dir, "embeddings")
-      operators.AnnIndex.queryIvfPqIndex(emb.filter(col("vec_id") < 8),
-          root, m = 8, dim = 64, k = 5, nProbe = 2, twoLevel = false)
-        .withColumn("rank", col("rank").cast("long"))
-        .orderBy("qid", "rank")
+      serveAnn(s, dir, annTickIndex(s, dir), twoLevel = false)
     }),
     "q194_ann_balance_footers" -> ((s, dir) => {
       // FOOTER-METADATA drift monitor (round 17): q191's report
@@ -2271,8 +2090,7 @@ object SparkEntry {
       // q189's VERBATIM over the FULL src0 reference, so the hash
       // matches iff the OR-append is byte-equivalent to the one-shot
       // union build — any dropped or doubled bit flips an FP.
-      val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft_q192_${java.util.UUID.randomUUID()}")
+      val root = freshRoot("q192")
       val docs = t(s, dir, "documents")
       val ref = docs.filter(col("source") === "src0")
       operators.DedupIndex.writeBloomIndexSharded(
@@ -2287,7 +2105,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "q199_pipeline_tick" -> ((s, dir) => {
-      // PIPELINE-SCOPE MAINTENANCE AUTOPILOT (round 18): a five-kind
+      // PIPELINE-SCOPE MAINTENANCE AUTOPILOT: a five-kind
       // pipeline with pending debts on EVERY root (deletions ≡ 3 mod
       // 20, an unfolded ANN stream batch) resolved by ONE pipelineTick
       // call — row-wise compactions, ANN fold + compact, store-fed
@@ -2298,57 +2116,10 @@ object SparkEntry {
       // body probes all five surfaces (q193's grammar); the oracle
       // re-derives each over the survivors, so the hash matches iff
       // every autopilot action equals the hand-called operator's.
-      val root = pipelineTickFixture(s, dir)
-      val docs = t(s, dir, "documents")
-      val emb = t(s, dir, "embeddings")
-      val plain = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val neigh = docs.select((col("doc_id") - 1).as("doc_id"),
-        col("text").as("_nt"))
-      val exBatch = plain.join(neigh, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) === 0 && col("_nt").isNotNull,
-            col("_nt")).otherwise(col("text")).as("text"))
-      val sib = docs.select((col("doc_id") + 10).as("doc_id"),
-        col("text").as("_bt"))
-      val ndBatch = plain.join(sib, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(20)) === 15 && col("_bt").isNotNull,
-            col("_bt")).otherwise(col("text")).as("text"))
-      val probes = parallelCons(
-        () => operators.DedupIndex.admitAgainstIndex(exBatch, "text",
-          "doc_id", s"$root/exact")
-        .select(lit("exact").as("surface"), col("doc_id").as("id"),
-          col("keep_id").cast("long").as("a"), lit(0L).as("b"),
-          col("status").as("s")),
-        () => operators.DedupIndex.admitNearDupAgainstIndex(ndBatch,
-          "text", "doc_id", s"$root/minhash", s"$root/docstore",
-          k = 64, bands = 16, shingleN = 3, thetaBp = 5000L)
-        .select(lit("neardup").as("surface"), col("doc_id").as("id"),
-          col("keep_id").cast("long").as("a"), lit(0L).as("b"),
-          col("status").as("s")),
-        () => operators.DedupIndex.duplicateSpansAgainstIndex(plain,
-          "text", "doc_id", s"$root/anchor", k = 3, w = 4)
-        .select(lit("spans").as("surface"), col("doc_id").as("id"),
-          col("span_start").cast("long").as("a"),
-          col("span_end").cast("long").as("b"), lit("").as("s")),
-        () => operators.DedupIndex.bloomContaminationAgainstShardedIndex(
-          plain, "text", "doc_id", s"$root/bloomsh", n = 3, shards = 4,
-          mBits = 2048)
-        .select(lit("bloom").as("surface"), col("doc_id").as("id"),
-          col("n_maybe_dirty").cast("long").as("a"),
-          col("contamination_bp").cast("long").as("b"), lit("").as("s")),
-        () => operators.AnnIndex.queryIvfPqIndex(
-          emb.filter(col("vec_id") < 8), s"$root/ann", m = 8, dim = 64,
-          k = 5, nProbe = 2, twoLevel = true)
-        .select(lit("ann").as("surface"), col("qid").as("id"),
-          col("nid").cast("long").as("a"), col("rank").cast("long").as("b"),
-          lit("").as("s")))
-      val Seq(ex, nd, sp, bl, an) = probes: @unchecked
-      ex.unionByName(nd).unionByName(sp).unionByName(bl).unionByName(an)
-        .orderBy("surface", "id", "a", "b")
+      probePipeline(s, dir, pipelineTickFixture(s, dir))
     }),
     "q193_takedown_pipeline" -> ((s, dir) => {
-      // ONE-CALL MULTI-INDEX TAKEDOWN (round 17): the fixture runs a
+      // ONE-CALL MULTI-INDEX TAKEDOWN: the fixture runs a
       // single Takedown(ids ≡ 1 mod 20) across a pipeline holding ALL
       // FIVE index kinds + three stores — row-wise kinds tombstoned,
       // anchor + sharded-bloom REBUILT from their stores with the
@@ -2359,54 +2130,7 @@ object SparkEntry {
       // each surface's truth over the SURVIVING corpus, so the hash
       // matches iff the one call scrubbed every path — nothing serves
       // deleted content, nothing over-deletes survivors.
-      val root = takedownPipeline(s, dir)
-      val docs = t(s, dir, "documents")
-      val emb = t(s, dir, "embeddings")
-      val plain = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val neigh = docs.select((col("doc_id") - 1).as("doc_id"),
-        col("text").as("_nt"))
-      val exBatch = plain.join(neigh, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) === 0 && col("_nt").isNotNull,
-            col("_nt")).otherwise(col("text")).as("text"))
-      val sib = docs.select((col("doc_id") + 10).as("doc_id"),
-        col("text").as("_bt"))
-      val ndBatch = plain.join(sib, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(20)) === 15 && col("_bt").isNotNull,
-            col("_bt")).otherwise(col("text")).as("text"))
-      val probes = parallelCons(
-        () => operators.DedupIndex.admitAgainstIndex(exBatch, "text",
-          "doc_id", s"$root/exact")
-        .select(lit("exact").as("surface"), col("doc_id").as("id"),
-          col("keep_id").cast("long").as("a"), lit(0L).as("b"),
-          col("status").as("s")),
-        () => operators.DedupIndex.admitNearDupAgainstIndex(ndBatch,
-          "text", "doc_id", s"$root/minhash", s"$root/docstore",
-          k = 64, bands = 16, shingleN = 3, thetaBp = 5000L)
-        .select(lit("neardup").as("surface"), col("doc_id").as("id"),
-          col("keep_id").cast("long").as("a"), lit(0L).as("b"),
-          col("status").as("s")),
-        () => operators.DedupIndex.duplicateSpansAgainstIndex(plain,
-          "text", "doc_id", s"$root/anchor", k = 3, w = 4)
-        .select(lit("spans").as("surface"), col("doc_id").as("id"),
-          col("span_start").cast("long").as("a"),
-          col("span_end").cast("long").as("b"), lit("").as("s")),
-        () => operators.DedupIndex.bloomContaminationAgainstShardedIndex(
-          plain, "text", "doc_id", s"$root/bloomsh", n = 3, shards = 4,
-          mBits = 2048)
-        .select(lit("bloom").as("surface"), col("doc_id").as("id"),
-          col("n_maybe_dirty").cast("long").as("a"),
-          col("contamination_bp").cast("long").as("b"), lit("").as("s")),
-        () => operators.AnnIndex.queryIvfPqIndex(
-          emb.filter(col("vec_id") < 8), s"$root/ann", m = 8, dim = 64,
-          k = 5, nProbe = 2, twoLevel = true)
-        .select(lit("ann").as("surface"), col("qid").as("id"),
-          col("nid").cast("long").as("a"), col("rank").cast("long").as("b"),
-          lit("").as("s")))
-      val Seq(ex, nd, sp, bl, an) = probes: @unchecked
-      ex.unionByName(nd).unionByName(sp).unionByName(bl).unionByName(an)
-        .orderBy("surface", "id", "a", "b")
+      probePipeline(s, dir, takedownPipeline(s, dir))
     }),
     "q106_canonical_keep" -> ((s, dir) => {
       // the keep rule after dedup clustering: one surviving doc per
@@ -3064,15 +2788,7 @@ object SparkEntry {
       // The store fixture builds ONCE per (sf dir, JVM) — the timed body
       // is the pruning path itself (stats query + explicit-file scan),
       // not the partitioned write that creates the fixture.
-      val out = statsStoreFor(s, dir)
-      val stats = s.read.parquet(s"$out-stats")
-      val uuids = (0 until 100 by 5)
-        .map(u => f"00000000-0000-0000-0000-$u%012d")
-      graft.sources.StatsIndex.prunedScan(s, stats, out, uuids,
-          "2024-01-10T00:00:00Z", "2024-01-20T00:00:00Z")
-        .groupBy("uuid")
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .orderBy("uuid")
+      statsPrunedScan(s, statsStore(s, dir, refresh = false))
     }),
     "q109_stream_interval_join" -> ((s, dir) => {
       // §2.9 streaming in the correctness gate: the SAME watermarked
@@ -3083,24 +2799,12 @@ object SparkEntry {
       // watermark far exceeds the data span so nothing is late: parity is
       // exact, not approximate (cross-batch lateness is spec-tested).
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
       def side(tp: String) = {
-        // stream source by table SHAPE (round 14, same fix as q174): a
-        // directory-shaped events table streams by its path — the
-        // dir+pathGlobFilter form matches leaf FILE names and silently
-        // saw ZERO input files at the scale-probe builds (the real cause
-        // of the distrusted r13 q109 0.24 s probe row); the flat
-        // single-file fixtures keep the glob-filter form because the
-        // file source requires a directory basePath
-        val evPath = s"$dir/events.parquet"
-        val raw = (if (new java.io.File(evPath).isDirectory)
-            s.readStream.schema(schema).parquet(evPath)
-          else s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(dir))
+        val raw = tableStream(s, dir, "events")
         // withWatermark wants TimestampType: NANOS files read as long
         // (floored to µs), µs-NTZ files cast (session tz is a label only —
         // the join bound and the grouped output are tz-invariant)
-        val ts = schema("ts").dataType.typeName match {
+        val ts = raw.schema("ts").dataType.typeName match {
           case "long" => raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
           case "timestamp_ntz" => raw.withColumn("ts", col("ts").cast("timestamp"))
           case _ => raw

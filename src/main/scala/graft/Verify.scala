@@ -2,10 +2,23 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. An optional
+  * comma list of query names restricts both to those queries, so
+  * `tools/local_verify.py <sfDir> <outDir>` checks just them:
+  *
+  *   sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/v q23_embed_ivf,q102_ivf_pq"
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [query,query,...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    selected.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"no such queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    def wanted(name: String): Boolean = selected.forall(_(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,7 +28,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -34,7 +47,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(o => wanted(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

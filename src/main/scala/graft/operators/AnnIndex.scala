@@ -42,11 +42,34 @@ object AnnIndex {
   /** Build + persist the IVF-PQ index (corpus-proportional, run once).
     * `centroids` (cid, cvec) and `codebook` (j, code, cvec) are caller-
     * supplied — mod-seeded, k-means, or learned — and stored alongside
-    * so the index is self-describing. */
+    * so the index is self-describing.
+    *
+    * A fresh root is written directly. Over a root that already holds
+    * an index (`_graft_meta` exists) this is [[rebuildIvfPqIndex]]: the
+    * new index is built complete at a sibling root and swapped in by two
+    * renames, so a failed overwrite leaves the old index serving, and
+    * nothing of the old root survives beside the new relations — not
+    * `codes_stream/` (encoded against the old quantizer) nor
+    * `_tombstones`. As in any rebuild, pending tombstones are applied to
+    * `corpus` and the streaming checkpoint carries over. */
   def writeIvfPqIndex(
       corpus: DataFrame, centroids: DataFrame, codebook: DataFrame,
       m: Int, dim: Int, path: String, twoLevel: Boolean = false,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    val meta = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
+    if (meta.getFileSystem(corpus.sparkSession.sessionState.newHadoopConf())
+        .exists(meta))
+      rebuildIvfPqIndex(corpus, centroids, codebook, m, dim, path,
+        twoLevel, idCol, vecCol)
+    else buildIvfPqIndex(corpus, centroids, codebook, m, dim, path,
+      twoLevel, idCol, vecCol)
+  }
+
+  /** [[writeIvfPqIndex]] into a root that holds no index. */
+  private def buildIvfPqIndex(
+      corpus: DataFrame, centroids: DataFrame, codebook: DataFrame,
+      m: Int, dim: Int, path: String, twoLevel: Boolean,
+      idCol: String, vecCol: String): Unit = {
     require(m > 0 && dim % m == 0, s"dim=$dim must be a multiple of m=$m")
     val dsub = dim / m
     val cents = centroids.select(col("cid"), col("cvec"))
@@ -54,12 +77,12 @@ object AnnIndex {
     val (assign, supersWrite) =
       if (twoLevel) {
         val (supers, cmap) = Similarity.superStructure(cents)
-        // PERSIST the super set (round 18): the routing anchors freeze
-        // at build time like the centroids/codebook. Deriving supers
-        // from the live centroid relation was what made two-level
-        // hot-list splits unsound — adding child centroids shifted the
-        // rank-based super selection and re-routed UNRELATED lists'
-        // probes. With `supers/` frozen, the centroid→super map
+        // PERSIST the super set: the routing anchors freeze at build
+        // time like the centroids/codebook. Deriving supers from the
+        // live centroid relation makes two-level hot-list splits
+        // unsound — adding child centroids shifts the rank-based super
+        // selection and re-routes UNRELATED lists' probes. With
+        // `supers/` frozen, the centroid→super map
         // re-derives cheaply per use ([[Similarity.superMap]]) and a
         // split's children enter exactly one super's group while every
         // other group is untouched.
@@ -71,20 +94,8 @@ object AnnIndex {
           carryVec = false), Seq.empty[() => Unit])
     // the four relation writes are independent (the codes join consumes
     // the IN-MEMORY cents/cb/supers, never the written files) — overlap
-    // them (FanOut.inParallel, guide §2.6); meta stays LAST so a crash
-    // mid-build never leaves a meta claiming a complete index.
-    // REBUILD-in-place safety (round 19, ADVICE): when overwriting an
-    // existing index, its OLD meta would keep validating via checkMeta
-    // while the relations are a mix of old and new — invalidate it
-    // FIRST, so any crash window between here and the final writeMeta
-    // fails loud at the meta check instead of serving an inconsistent
-    // index.
-    locally {
-      val mp = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
-      val mfs = mp.getFileSystem(
-        corpus.sparkSession.sessionState.newHadoopConf())
-      if (mfs.exists(mp)) mfs.delete(mp, true)
-    }
+    // them (FanOut.inParallel); meta stays LAST so a crash mid-build
+    // never leaves a meta claiming a complete index.
     FanOut.inParallel(Seq(
       () => cents.write.mode("overwrite").parquet(s"$path/centroids"),
       () => cb.write.mode("overwrite").parquet(s"$path/codebook")) ++
@@ -241,7 +252,7 @@ object AnnIndex {
       // live root's tombstones are seen too.)
       val corpusSurv = DedupIndex.dropTombstoned(
         corpus.sparkSession, corpus, path, idCol)
-      writeIvfPqIndex(corpusSurv, centroids, codebook, m, dim, tmp,
+      buildIvfPqIndex(corpusSurv, centroids, codebook, m, dim, tmp,
         twoLevel, idCol, vecCol)
     }
 

@@ -71,6 +71,16 @@ private[graft] object FanOut {
   val BytesPerTaskKey = "graft.fanout.bytesPerTask"
   private val BytesPerTaskDefault: Long = 64L << 10
 
+  /** The session's bytes-per-task: [[BytesPerTaskKey]] if set, else the
+    * default. A value that is not a positive integer fails naming the
+    * key. */
+  private[graft] def bytesPerTask(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption(BytesPerTaskKey).map { v =>
+      val n = scala.util.Try(v.trim.toLong).getOrElse(-1L)
+      require(n > 0, s"$BytesPerTaskKey must be a positive integer, got '$v'")
+      n
+    }.getOrElse(BytesPerTaskDefault)
+
   /** Run independent Spark ACTIONS (writes, materializations) from
     * parallel driver threads (guide §2.6 "overlap independent jobs"):
     * Spark's scheduler happily runs several jobs at once; sequential
@@ -103,14 +113,11 @@ private[graft] object FanOut {
     // their micro-batch planner re-plans per batch anyway — pass through
     if (df.isStreaming) return df
     val spark = df.sparkSession
+    val perTask = bytesPerTask(spark)
     val cores = spark.sparkContext.defaultParallelism
     if (cores <= 1) return df
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est >= BigInt(thresholdBytes)) return df
-    val perTask = spark.conf.getOption(BytesPerTaskKey)
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(BytesPerTaskDefault)
     val target = (est / BigInt(perTask)).min(BigInt(cores)).toInt
     if (target <= 2) df else df.repartition(target)
   }

@@ -35,4 +35,34 @@ class EntrySpec extends AnyFunSuite {
       assert(ca == cb, s"$name row count unstable: $ca vs $cb")
     }
   }
+
+  test("fixture memo: one build per (name, dir); a failed build is not " +
+      "memoized") {
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    var builds = 0
+    def fx(name: String, dir: String) =
+      SparkEntry.fixture(s"memo${tag}_$name", dir) { root =>
+        builds += 1
+        new java.io.File(root).mkdirs()
+      }
+    val a = fx("a", "/sf/one")
+    assert(new java.io.File(a).getName.startsWith(s"graft_memo${tag}_a_"))
+    assert(new java.io.File(a).isDirectory)
+    assert(fx("a", "/sf/one") == a)
+    assert(builds == 1)
+    val otherName = fx("b", "/sf/one")
+    val otherDir = fx("a", "/sf/two")
+    assert(Set(a, otherName, otherDir).size == 3)
+    assert(builds == 3)
+    var attempts = 0
+    def flaky() = SparkEntry.fixture(s"memo${tag}_flaky", "/sf/one") { _ =>
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("first build fails")
+    }
+    intercept[IllegalStateException](flaky())
+    val root = flaky()
+    assert(attempts == 2)
+    assert(flaky() == root)
+    assert(attempts == 2)
+  }
 }

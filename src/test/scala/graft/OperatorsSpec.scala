@@ -508,6 +508,86 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!served().exists(_._2 == 5L))
   }
 
+  test("writeIvfPqIndex over an existing index: an overwrite whose corpus " +
+      "throws mid-build leaves the old index answering the same top-k") {
+    val s = spark; import s.implicits._
+    val vecs = (0 until 60).map { i =>
+      val a = 2 * math.Pi * i / 60.0
+      (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat,
+        (math.cos(3 * a) / 2).toFloat, (math.sin(3 * a) / 2).toFloat))
+    }.toDF("vec_id", "embedding")
+    // queries spread over the circle, every list probed: a root mixing
+    // new centroids with old codes would lose whole lists
+    val queries = vecs.filter(pmod(col("vec_id"), lit(7)) === 3)
+    val cb = Similarity.pqCodebook(vecs, m = 2, seedMod = 15)
+    def centsMod(mod: Int) = vecs.filter(pmod(col("vec_id"), lit(mod)) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val path = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
+      s"/graft_overwrite_fail_${java.util.UUID.randomUUID()}")
+    AnnIndex.writeIvfPqIndex(vecs, centsMod(12), cb, m = 2, dim = 4, path,
+      twoLevel = true)
+    def served() = AnnIndex.queryIvfPqIndex(queries, path, m = 2, dim = 4,
+        k = 4, nProbe = 64, twoLevel = true).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    val before = served()
+    assert(before.nonEmpty)
+    // the codes write reads vector 30 and fails after the build has
+    // begun (read from parquet: over local rows the optimizer would
+    // evaluate the poison while planning, before anything is written)
+    val src = TempDirs.register(s"$path-src")
+    vecs.write.parquet(src)
+    val poisoned = s.read.parquet(src).withColumn("embedding",
+      when(col("vec_id") === 30L, raise_error(lit("poisoned vector 30")))
+        .otherwise(col("embedding")))
+    val err = intercept[Exception](AnnIndex.writeIvfPqIndex(poisoned,
+      centsMod(10), cb, m = 2, dim = 4, path, twoLevel = true))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("poisoned vector 30")))
+    assert(served() == before)
+  }
+
+  test("writeIvfPqIndex over a stream-grown index serves no codes_stream " +
+      "row: the overwrite replaces the whole root") {
+    val s = spark; import s.implicits._
+    val vecs = (0 until 60).map { i =>
+      val a = 2 * math.Pi * i / 60.0
+      (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat,
+        (math.cos(3 * a) / 2).toFloat, (math.sin(3 * a) / 2).toFloat))
+    }.toDF("vec_id", "embedding")
+    val queries = vecs.filter(col("vec_id") < 3)
+    val cb = Similarity.pqCodebook(vecs, m = 2, seedMod = 15)
+    def centsMod(mod: Int) = vecs.filter(pmod(col("vec_id"), lit(mod)) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val path = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
+      s"/graft_overwrite_stream_${java.util.UUID.randomUUID()}")
+    val srcDir = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}" +
+      s"/graft_overwrite_src_${java.util.UUID.randomUUID()}")
+    val base = vecs.filter(pmod(col("vec_id"), lit(5)) =!= 0)
+    AnnIndex.writeIvfPqIndex(base, centsMod(12), cb, m = 2, dim = 4, path,
+      twoLevel = true)
+    vecs.filter(pmod(col("vec_id"), lit(5)) === 0)
+      .coalesce(1).write.parquet(srcDir)
+    AnnIndex.streamIvfPqIngest(
+      s.readStream.schema(vecs.schema).parquet(srcDir), path, m = 2,
+      dim = 4, twoLevel = true)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sessionState.newHadoopConf())
+    val streamDir = new org.apache.hadoop.fs.Path(s"$path/codes_stream")
+    assert(fs.exists(streamDir))
+    // re-train (mod-10 centroids) and overwrite with the base corpus only
+    AnnIndex.writeIvfPqIndex(base, centsMod(10), cb, m = 2, dim = 4, path,
+      twoLevel = true)
+    assert(!fs.exists(streamDir))
+    val served = AnnIndex.queryIvfPqIndex(queries, path, m = 2, dim = 4,
+        k = 4, nProbe = 64, twoLevel = true).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    val mem = Similarity.ivfPqTopK(base, queries, centsMod(10), cb, m = 2,
+        dim = 4, k = 4, nProbe = 64, twoLevel = true).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    assert(served == mem)
+    assert(!served.exists(_._2 % 5 == 0))
+  }
+
   test("ANN tombstones (round 16): deleted vectors drop out of served " +
       "top-k (equals in-memory serving over the surviving corpus), an " +
       "exact copy of a deleted vector re-admits, and compaction applies " +

@@ -821,4 +821,24 @@ class RobustnessSpec extends AnyFunSuite {
     assert(operators.DedupIndex.bloomContaminationAgainstIndex(
       empty, "text", "doc_id", bPath).count() == 0L)
   }
+
+  test("graft.fanout.bytesPerTask: a bad value fails naming the key; " +
+      "unset uses the default") {
+    val key = operators.FanOut.BytesPerTaskKey
+    val df = spark.range(10).toDF()
+    try {
+      Seq("abc", "0", "-5", "").foreach { bad =>
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](
+          operators.FanOut.fanOutSmall(df))
+        assert(e.getMessage.contains(key), e.getMessage)
+        assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+      spark.conf.set(key, " 4096 ")
+      assert(operators.FanOut.bytesPerTask(spark) == 4096L)
+      spark.conf.unset(key)
+      assert(operators.FanOut.bytesPerTask(spark) == (64L << 10))
+      assert(operators.FanOut.fanOutSmall(df).count() == 10L)
+    } finally spark.conf.unset(key)
+  }
 }
