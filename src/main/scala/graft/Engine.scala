@@ -26,15 +26,16 @@ import scala.jdk.CollectionConverters._
   * use the engine collects the quads into a driver-resident index
   * (per-predicate forward and reverse adjacency for the union graph and
   * each named graph, [[graft.sparql.LocalBgp]]) — but only when the graph
-  * holds at most `Closure.DriverSideLimit` (200,000) quads, the same
-  * cutoff that keeps closures on the driver, because the index holds the
-  * whole graph in driver memory. A count of the cached quads decides
-  * before any row is shipped, so a graph over the cutoff pays one count. Conjunctive queries (a SELECT whose WHERE
+  * is under [[graft.plans.DriverSide]]'s one cutoff (200,000 quads), the
+  * same one that keeps closures and connected components on the driver,
+  * because the index holds the whole graph in driver memory. A count of
+  * the cached quads decides before any row is shipped, so a graph over
+  * the cutoff pays one count. Conjunctive queries (a SELECT whose WHERE
   * is only triple patterns and property paths) are then answered from the
   * index in-process, like the reference's oxigraph store, and no Spark job
   * runs between the query and the scan. Every other construct, a graph
   * over the cutoff, or an evaluation whose intermediate solutions pass
-  * `Closure.ClosureRowLimit` plans through [[BgpPlanner]] as a Catalyst
+  * `DriverSide.OutputLimit` plans through [[BgpPlanner]] as a Catalyst
   * plan over the cached quads. The real Mortar graphs (45 sites with the
   * Brick ontology merged into every named graph) exceed the cutoff and
   * take that Spark path.
@@ -43,8 +44,8 @@ import scala.jdk.CollectionConverters._
   * choice (matching the reference) because it enables STATIC partition
   * pruning: the scan never lists, opens or reads a single file of a
   * non-matching stream, which is what makes the pattern survive a 100 TB
-  * store. Only when the id set grows beyond `inListThreshold` do we fall
-  * back to a broadcast left-semi join (dynamic partition pruning handles
+  * store. Only when the id set grows beyond `Engine.InListLimit` (100,000
+  * ids) do we fall back to a broadcast left-semi join (dynamic partition pruning handles
   * the rest). The fact table is never collected.
   *
   * The time window reaches the scan's generated code as bound parameters
@@ -60,8 +61,7 @@ import scala.jdk.CollectionConverters._
 final class Engine(
     val spark: SparkSession,
     val quads: DataFrame,
-    val fact: DataFrame,
-    inListThreshold: Int = 100000) {
+    val fact: DataFrame) {
 
   BoundParams.install(spark)
 
@@ -129,7 +129,7 @@ final class Engine(
     if (uuids.isEmpty) return fact.limit(0)
     val timePred = col("time") >= to_timestamp(lit(start)) &&
       col("time") <= to_timestamp(lit(end))
-    if (uuids.lengthCompare(inListThreshold) <= 0)
+    if (uuids.lengthCompare(Engine.InListLimit) <= 0)
       fact.filter(col("uuid").isin(uuids: _*) && timePred)
     else {
       import spark.implicits._
@@ -242,6 +242,9 @@ object Engine {
   /** Sentinel defaults for the unbounded time range (reference: client.py:67-68). */
   val DefaultStart = "2000-01-01T00:00:00Z"
   val DefaultEnd = "2100-01-01T00:00:00Z"
+
+  /** Ids up to which [[Engine.data]] filters with an IN-list literal. */
+  private val InListLimit = 100000
 
   /** Build an engine from a directory of `.ttl` site graphs and the root of
     * the partitioned fact table (reference: Client.__init__, client.py:15-31).

@@ -80,18 +80,12 @@ object Flagship {
     // task → one time-sorted file) while parallelizing the per-file
     // latency — measured at sf0.1/local[32]: 1500 streams, 12.5 s at 32
     // write tasks → 5.0 s at 128 (guide §2.6 idle-capacity; §6 small
-    // files). Scale-adaptive: factor × cores, floored by the session's
-    // shuffle partitions, so a tuned production setting is never reduced.
-    val perCore = spark.conf.getOption("graft.ingest.writeTasksPerCore")
-      .map { v =>
-        val n = scala.util.Try(v.trim.toInt).getOrElse(-1)
-        require(n > 0, s"graft.ingest.writeTasksPerCore must be a " +
-          s"positive integer, got '$v'")
-        n
-      }.getOrElse(4)
+    // files). Scale-adaptive: four tasks per core, floored by the
+    // session's shuffle partitions, so a tuned production setting is
+    // never reduced.
     val writeTasks = math.max(
       spark.sessionState.conf.numShufflePartitions,
-      perCore * spark.sparkContext.defaultParallelism)
+      4 * spark.sparkContext.defaultParallelism)
     fact.repartition(writeTasks, col("collection"), col("uuid"))
       .sortWithinPartitions("uuid", "time")
       .write.mode("overwrite").partitionBy("collection", "uuid")

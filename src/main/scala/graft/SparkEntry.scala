@@ -762,7 +762,7 @@ object SparkEntry {
           concat(lit("urn:c#"), col("o_custkey")).as("dst"))
         .union(tpchQuads(s, dir, "x", "x")
           .select(col("s").as("src"), col("o").as("dst")))
-      graft.plans.Closure.transitive(edges, driverSideLimit = 0)
+      graft.plans.Closure.transitiveDistributed(edges)
         .orderBy("src", "dst")
     }),
     "q15_time_bucket" -> ((s, dir) => {

@@ -521,63 +521,69 @@ object Dedup {
 
   /** Connected components over a near-duplicate pair graph: the step that
     * turns candidate PAIRS into dedup GROUPS (keep one doc per component).
-    * Distributed min-label propagation — each round every node adopts the
-    * smallest label among itself and its neighbors; converges in graph-
-    * diameter rounds (checkpointed per round, same shape as the closure
-    * fixpoint). Returns (id, component) where component = smallest id
-    * reachable from `id` (isolated nodes map to themselves). */
+    * Returns (id, component) where component = smallest id reachable from
+    * `id` (isolated nodes map to themselves).
+    *
+    * The verified pair set is normally a vanishing fraction of the corpus,
+    * and the multi-round distributed fixpoint pays per-round job dispatch
+    * whatever its size. So when [[graft.plans.DriverSide]] collects the
+    * pairs (long/int ids only), a union-find on the driver labels them and
+    * the labels are broadcast back: a count, a collect and one broadcast
+    * join instead of diameter× rounds. Larger pair sets, and non-integral
+    * ids, take the distributed min-label loop. */
   def connectedComponents(
       nodes: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 30, driverSideLimit: Int = 2000000): DataFrame = {
-    // Fast path (same design as Closure.driverSideLimit): the verified
-    // near-duplicate PAIR set is normally a vanishing fraction of the
-    // corpus, and the multi-round distributed fixpoint pays per-round job
-    // dispatch regardless of data size. When the edge list fits the bound
-    // (long/int ids, ≤ driverSideLimit edges ≈ tens of MB) collect it ONCE,
-    // union-find on the driver, and broadcast the labels back — one job +
-    // one broadcast join instead of diameter× rounds. Graphs over the bound
-    // (or with non-integral ids) take the distributed min-label loop below,
-    // which only ever iterates over the edge-touched subgraph.
+      maxIter: Int = 30): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     // The (usually LSH-verified) pair pipeline feeding this is multi-stage;
     // materialize it ONCE — both branches reuse the checkpoint.
     val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
     val integral = p.schema.forall(f =>
       f.dataType == LongType || f.dataType == IntegerType)
-    if (driverSideLimit > 0 && integral && p.count() <= driverSideLimit) {
-      def lv(x: Any): Long = x match {
-        case l: Long => l
-        case i: Int => i.toLong
-      }
-      val probe = p.collect()
-      val parent = scala.collection.mutable.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // linking the larger root under the smaller keeps the invariant
-      // "root = minimum of its set", so find() yields the min-label
-      // component exactly as the distributed fixpoint does
-      probe.foreach { r =>
-        val (a, b) = (find(lv(r.get(0))), find(lv(r.get(1))))
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
-      val members = probe.iterator.flatMap(r => Iterator(lv(r.get(0)), lv(r.get(1))))
-        .toSet
-      val spark = nodes.sparkSession
-      import spark.implicits._
-      val idType = nodes.schema(idCol).dataType
-      val labelDf = members.toSeq.map(m => (m, find(m))).toDF("id", "_c")
-        .select(col("id").cast(idType).as("id"), col("_c").cast(idType).as("_c"))
-      return nodes.select(col(idCol).as("id"))
-        .join(broadcast(labelDf), Seq("id"), "left")
-        .select(col("id"), coalesce(col("_c"), col("id")).as("component"))
+    val small = if (!integral) None else graft.plans.DriverSide.collect(
+      p.rdd.map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
+    small.fold(connectedComponentsDistributed(nodes, idCol, p, maxIter))(
+      unionFind(nodes, idCol, _))
+  }
+
+  /** Min-label components of the collected `edges` by union-find. */
+  private def unionFind(nodes: DataFrame, idCol: String,
+      edges: Array[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
-    val sym = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
+    // linking the larger root under the smaller keeps the invariant
+    // "root = minimum of its set", so find() yields the min-label
+    // component exactly as the distributed fixpoint does
+    edges.foreach { case (x, y) =>
+      val (a, b) = (find(x), find(y))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val members = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val idType = nodes.schema(idCol).dataType
+    val labelDf = members.toSeq.map(m => (m, find(m))).toDF("id", "_c")
+      .select(col("id").cast(idType).as("id"), col("_c").cast(idType).as("_c"))
+    nodes.select(col(idCol).as("id"))
+      .join(broadcast(labelDf), Seq("id"), "left")
+      .select(col("id"), coalesce(col("_c"), col("id")).as("component"))
+  }
+
+  /** [[connectedComponents]] by distributed min-label propagation,
+    * whatever the size: each round every node adopts the smallest label
+    * among itself and its neighbors; converges in graph-diameter rounds
+    * (checkpointed per round, same shape as the closure fixpoint). */
+  private[graft] def connectedComponentsDistributed(
+      nodes: DataFrame, idCol: String, pairs: DataFrame,
+      maxIter: Int = 30): DataFrame = {
+    val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().localCheckpoint()
     // Iterate ONLY over nodes that appear in an edge: an isolated node is
     // its own component with zero propagation, so the fixpoint's working

@@ -81,46 +81,6 @@ object DedupIndex {
   val MaxBroadcastBytesKey = "graft.index.maxBroadcastBytes"
   private val MaxBroadcastBytesDefault: Long = 512L << 20
 
-  /** Opt-in conf key (round 18, the CBO option): when `true`,
-    * [[probeHint]] MEASURES the batch exactly — one lightweight
-    * aggregate job computing the exact row count and the exact
-    * string/binary byte volume — instead of trusting the optimizer's
-    * plan-stats estimate. This is the third point on the
-    * estimate-quality dial: plan stats are free but don't reduce
-    * through selective filters (a `corpus.filter(date === today)` batch
-    * carries a corpus-scale estimate and takes the shuffle plan
-    * unnecessarily); [[materializeBatch]] fixes the estimate with one
-    * batch-sized WRITE; this opt-in fixes it with one batch-sized READ
-    * (the aggregate scans the batch's lineage once, no scratch files) —
-    * right when the batch probes a single index, where materializing
-    * costs more than it saves. Off by default: the measurement is a
-    * blocking Spark job per probe call, wrong to bolt onto the common
-    * path where the plan estimate is already honest. */
-  val ExactProbeStatsKey = "graft.index.exactProbeStats"
-
-  /** Exact batch byte volume: octet_length for string/binary columns,
-    * element-width × cardinality for fixed-width arrays, schema default
-    * widths for the rest, plus Catalyst's 8-byte per-row overhead —
-    * the same quantity plan stats ESTIMATE, measured. */
-  private def exactBatchBytes(batch: DataFrame): BigInt = {
-    import org.apache.spark.sql.types._
-    val widths = batch.schema.fields.map { f =>
-      f.dataType match {
-        case StringType | BinaryType =>
-          coalesce(octet_length(col(f.name)).cast("long"), lit(0L))
-        case ArrayType(et, _) =>
-          coalesce(size(col(f.name)).cast("long") * lit(et.defaultSize.toLong),
-            lit(0L))
-        case dt => lit(dt.defaultSize.toLong)
-      }
-    }
-    val row = batch
-      .select(sum(widths.reduce(_ + _)).as("bytes"), count(lit(1)).as("n"))
-      .head()
-    val bytes = if (row.isNullAt(0)) 0L else row.getLong(0)
-    BigInt(bytes) + BigInt(row.getLong(1)) * 8
-  }
-
   /** One broadcast decision per probe call, keyed on the BATCH
     * relation's optimizer-estimated size (no Spark job — the same
     * plan-stats signal Spark's own autoBroadcastJoinThreshold reads;
@@ -142,24 +102,21 @@ object DedupIndex {
     * shuffle-fallback costs a slower batch, a false broadcast costs a
     * driver OOM. Operators with such batch shapes raise
     * [[MaxBroadcastBytesKey]] for the session, or pre-materialize the
-    * batch so its estimate is its size; an ALWAYS-ON exact runtime
-    * measurement was rejected — it would bolt a blocking job onto
-    * every probe call in the common path — but [[ExactProbeStatsKey]]
-    * opts a session into exactly that trade (round 18). */
+    * batch with [[materializeBatch]] so its estimate is its size; an
+    * exact runtime measurement per probe was rejected — it would bolt a
+    * blocking job onto every probe call in the common path. */
   private[operators] def probeHint(batch: DataFrame): DataFrame => DataFrame = {
-    val conf = batch.sparkSession.conf
-    val limit = conf.getOption(MaxBroadcastBytesKey)
-      .map(_.toLong).getOrElse(MaxBroadcastBytesDefault)
-    val est: BigInt =
-      if (conf.getOption(ExactProbeStatsKey)
-            .exists(_.trim.equalsIgnoreCase("true")))
-        exactBatchBytes(batch)
-      else batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val limit = batch.sparkSession.conf.getOption(MaxBroadcastBytesKey).map { v =>
+      val n = v.trim.toLongOption
+      require(n.isDefined, s"$MaxBroadcastBytesKey must be an integer byte count, got '$v'")
+      n.get
+    }.getOrElse(MaxBroadcastBytesDefault)
+    val est = batch.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= limit) (df: DataFrame) => broadcast(df) else identity
   }
 
   /** Pre-materialize a probe batch so its optimizer estimate equals its
-    * TRUE size (round 17 — the [[probeHint]] watch-list fix): writes
+    * TRUE size (the [[probeHint]] watch-list fix): writes
     * the batch to a scratch parquet dir and reads it back, so the
     * relation's plan stats are its actual file bytes. The foot-gun this
     * removes: without CBO column stats Catalyst does not reduce
@@ -312,10 +269,13 @@ object DedupIndex {
     // bare read would fail schema inference and BRICK every query on
     // the index. No committed file = no committed deletion: treat as
     // absent (the next deleteDocs overwrites the orphan normally).
-    val hasData = fs.listStatus(p).exists(f =>
-      f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-    if (hasData) Some(spark.read.parquet(p.toString)) else None
+    // The committed files are read by name: Spark treats the
+    // underscore-named dir itself as hidden and warns on every read.
+    val files = fs.listStatus(p).collect {
+      case f if f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".") => f.getPath.toString
+    }
+    if (files.isEmpty) None else Some(spark.read.parquet(files.toIndexedSeq: _*))
   }
 
   /** Drop `df` rows whose `idName` is tombstoned at `path` — the
@@ -1117,10 +1077,14 @@ object DedupIndex {
   private[graft] def requireAtomicRenameFs(
       spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, tag: String): Unit = {
+    val key = "spark.graft.index.allowNonAtomicRename"
+    val allowed = spark.conf.getOption(key).exists { v =>
+      val b = v.trim.toLowerCase
+      require(b == "true" || b == "false", s"$key must be true or false, got '$v'")
+      b == "true"
+    }
     val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    if (NonAtomicRenameSchemes.contains(scheme) &&
-        !spark.conf.getOption("spark.graft.index.allowNonAtomicRename")
-          .exists(_.trim.equalsIgnoreCase("true")))
+    if (NonAtomicRenameSchemes.contains(scheme) && !allowed)
       throw new IllegalStateException(
         s"atomicSwap($tag): index root $root is on '$scheme', where " +
           "directory rename is not atomic — the swap's crash-safety " +

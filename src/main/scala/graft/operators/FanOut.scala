@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Scale-adaptive input fan-out for compute-dense derivations
-  * (optimization round 18, guide §2.5 "input skew: one huge unsplittable
-  * file … repartition immediately after the read", applied to the
-  * bytes-vs-compute mismatch; re-tuned round 19 — see below).
+  * (guide §2.5 "input skew: one huge unsplittable file … repartition
+  * immediately after the read", applied to the bytes-vs-compute
+  * mismatch).
   *
   * Spark sizes scan partitions by BYTES (`maxPartitionBytes`, floored by
   * `openCostInBytes`), but gram explodes, vector-distance kernels, media
@@ -25,26 +25,22 @@ import org.apache.spark.sql.DataFrame
   * on by default) and every consumer below it is order-insensitive
   * (aggregates/joins), so results are byte-identical.
   *
-  * Round-19 re-tune (VERDICT r18 item 1 — the 32-core regressions): the
-  * round-18 form always repartitioned to `defaultParallelism`, so at 32
-  * cores a kilobyte-sized relation (an 8-row query batch, a second-round
-  * aggregate output) paid a 32-task exchange per call site, and stacked
-  * call sites in one subtree multiplied that (q166: 42 → 58 Exchange
-  * nodes; driver bench q164 0.18×, q176 0.26× at 32 cores vs healthy at
-  * 8). Two changes, both work-aware rather than core-count-driven:
+  * The fan-out is sized by the work, not by the core count: always
+  * repartitioning to `defaultParallelism` made a kilobyte-sized relation
+  * (an 8-row query batch, a second-round aggregate output) pay a 32-task
+  * exchange per call site at 32 cores, and stacked call sites multiplied
+  * that (driver bench q164 0.18×, q176 0.26× at 32 cores vs healthy at
+  * 8). So:
   *
-  *   1. The TARGET partition count is sized by the data itself —
-  *      `estBytes / bytesPerTask` (64 KiB default: with the 10²–10⁴
-  *      kernel multiplier that is tens of MB of WORK per task), capped
-  *      at `defaultParallelism`. A tiny relation now gets few (or no)
-  *      extra partitions at ANY core count, so the fan-out no longer
-  *      anti-scales with cores.
+  *   1. The TARGET partition count is `estBytes / BytesPerTask`, capped
+  *      at `defaultParallelism`. A tiny relation gets few (or no) extra
+  *      partitions at ANY core count, so the fan-out does not anti-scale
+  *      with cores.
   *   2. A relation whose estimated target is ≤ 2 passes through
   *      untouched — an exchange that buys ≤ 2-way parallelism never
   *      repays its stage latency.
   *
-  * Call-site rule (the round-18 builder's own §4 rule, now applied
-  * consistently): fan out only where the dense work sits BETWEEN the
+  * Call-site rule: fan out only where the dense work sits BETWEEN the
   * scan and the first shuffle (kernel-in-scan signatures, broadcast
   * cross-join argmax/argmin, stride-1 gram explodes). Derivations whose
   * dense phase runs AFTER a keyed shuffle (per-doc windows, keyed
@@ -55,42 +51,29 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object FanOut {
   /** Bytes below which an input is considered "scan could not have
-    * spread this": `openCostInBytes` (4 MB) × a fixed small factor,
-    * capped at 1 GiB. Deliberately NOT scaled by core count (round 19):
-    * the round-18 `cores × 4 MB` made MORE relations qualify on BIGGER
-    * clusters — each then paying a `defaultParallelism`-task shuffle of
-    * tiny data. 128 MB ≈ one `maxPartitionBytes` split: above it the
-    * scan itself splits the input and the fan-out is moot. */
+    * spread this": `openCostInBytes` (4 MB) × a fixed small factor.
+    * Deliberately NOT scaled by core count: `cores × 4 MB` made MORE
+    * relations qualify on BIGGER clusters — each then paying a
+    * `defaultParallelism`-task shuffle of tiny data. 128 MB ≈ one
+    * `maxPartitionBytes` split: above it the scan itself splits the
+    * input and the fan-out is moot. */
   private val thresholdBytes: Long = 128L << 20
 
   /** Estimated input bytes that buy one task of fan-out. 64 KiB of
     * input × the 10²–10⁴ kernel work multiplier ≈ tens of MB of work
     * per task — small enough to spread real corpora wide, large enough
-    * that an 8-row probe batch never forces an exchange. Overridable
-    * per session for experiments (`graft.fanout.bytesPerTask`). */
-  val BytesPerTaskKey = "graft.fanout.bytesPerTask"
-  private val BytesPerTaskDefault: Long = 64L << 10
-
-  /** The session's bytes-per-task: [[BytesPerTaskKey]] if set, else the
-    * default. A value that is not a positive integer fails naming the
-    * key. */
-  private[graft] def bytesPerTask(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(BytesPerTaskKey).map { v =>
-      val n = scala.util.Try(v.trim.toLong).getOrElse(-1L)
-      require(n > 0, s"$BytesPerTaskKey must be a positive integer, got '$v'")
-      n
-    }.getOrElse(BytesPerTaskDefault)
+    * that an 8-row probe batch never forces an exchange. */
+  private val BytesPerTask: Long = 64L << 10
 
   /** Run independent Spark ACTIONS (writes, materializations) from
     * parallel driver threads (guide §2.6 "overlap independent jobs"):
     * Spark's scheduler happily runs several jobs at once; sequential
     * driver code is the only reason small independent writes serialize.
     *
-    * Waits for EVERY unit to finish (unbounded — round 19, ADVICE: the
-    * previous 600 s cap was a scale-dependent hard failure: a
-    * corpus-sized overlapped write legitimately exceeds 10 minutes at
-    * production scale, and the sequential code it replaced had no such
-    * bound), then rethrows the FIRST failure in argument order. Awaiting
+    * Waits for EVERY unit to finish (unbounded: a 600 s cap was a
+    * scale-dependent hard failure — a corpus-sized overlapped write
+    * legitimately exceeds 10 minutes at production scale, and the
+    * sequential code it replaced had no such bound), then rethrows the FIRST failure in argument order. Awaiting
     * all before rethrowing means a caller that catches and retries can
     * never race a still-running sibling write into the same path. */
   private[graft] def inParallel(units: (() => Unit)*): Unit = {
@@ -112,13 +95,11 @@ private[graft] object FanOut {
     // streaming frames have no optimizedPlan (batch-only assertion) and
     // their micro-batch planner re-plans per batch anyway — pass through
     if (df.isStreaming) return df
-    val spark = df.sparkSession
-    val perTask = bytesPerTask(spark)
-    val cores = spark.sparkContext.defaultParallelism
+    val cores = df.sparkSession.sparkContext.defaultParallelism
     if (cores <= 1) return df
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est >= BigInt(thresholdBytes)) return df
-    val target = (est / BigInt(perTask)).min(BigInt(cores)).toInt
+    val target = (est / BigInt(BytesPerTask)).min(BigInt(cores)).toInt
     if (target <= 2) df else df.repartition(target)
   }
 }

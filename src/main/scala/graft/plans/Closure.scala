@@ -9,11 +9,12 @@ import org.apache.spark.sql.functions._
   * delegates to oxigraph (reference: mortar-parquet-client/client.py:121,
   * 134,136).
   *
-  * Two execution strategies, chosen by edge count:
+  * Two execution strategies, chosen by [[DriverSide]]:
   *
   *   - Small relation (ontology hierarchies — Brick is ≤ a few 10⁴ edges):
   *     collect to the driver, run an exact BFS closure in Scala, return a
-  *     (broadcastable) DataFrame. One job, no iterative shuffles.
+  *     (broadcastable) DataFrame. A count and a collect, no iterative
+  *     shuffles.
   *   - Large relation: distributed semi-naive fixpoint — each iteration
   *     joins the frontier with the edge set, unions, distincts, and
   *     `localCheckpoint`s to sever the growing lineage. AQE handles the
@@ -25,51 +26,33 @@ import org.apache.spark.sql.functions._
   */
 object Closure {
 
-  /** Edge count up to which a closure runs on the driver. `Engine` reuses
-    * it as the quad count up to which it keeps the whole graph in a
-    * driver-resident index ([[graft.sparql.LocalBgp]]). */
-  val DriverSideLimit = 200000L
-
-  /** Hard cap on CLOSURE rows the driver-side strategy may materialize.
-    * Edge count alone is the wrong cutover variable: a 200k-edge chain
-    * graph has an O(V²) closure that would OOM the driver even though the
-    * edge relation is tiny. The BFS below counts its output as it goes and
-    * abandons the driver path the moment it exceeds this, falling back to
-    * the distributed fixpoint (which never materializes the closure in one
-    * JVM). */
-  val ClosureRowLimit = 2000000L
-
   /** Closure of `edges` (columns `src`, `dst`). Output columns `src`,`dst`,
     * distinct. Does NOT include zero-length pairs — see `withIdentity`.
-    * `driverSideLimit` tunes the strategy cutover (0 forces the
-    * distributed fixpoint); `closureRowLimit` bounds the driver-side
-    * RESULT size, the variable that actually OOMs the driver. */
-  def transitive(edges: DataFrame, maxIter: Int = 50,
-      driverSideLimit: Long = DriverSideLimit,
-      closureRowLimit: Long = ClosureRowLimit): DataFrame = {
+    * The BFS on the driver runs when [[DriverSide]] collects the edges and
+    * the closure stays within its output cap; else the fixpoint. */
+  def transitive(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("string"), col("dst").cast("string"))
-      .distinct()
-    val (pairs, edgeCount) = counted(e)
-    if (edgeCount == 0) Seq.empty[(String, String)].toDF("src", "dst")
-    else if (edgeCount <= driverSideLimit)
-      driverSide(spark, pairs.collect(), closureRowLimit)
-        .getOrElse(distributed(pairs.toDF("src", "dst"), maxIter))
-    else distributed(pairs.toDF("src", "dst"), maxIter)
+    val pairs = pairsOf(edges)
+    DriverSide.collect(pairs).flatMap(driverSide(spark, _))
+      .getOrElse(distributed(pairs.toDF("src", "dst"), maxIter))
   }
 
-  /** The pairs of an (src, dst) relation as one RDD, and their count.
-    * The count picks the strategy without shipping a pair to the driver;
-    * the driver-side collect or the fixpoint's first checkpoint then read
-    * the relation's shuffle output instead of re-running its upstream
-    * plan, and nothing is pinned. The RDD also sheds the upstream plan's
+  /** [[transitive]] through the distributed fixpoint whatever the size. */
+  private[graft] def transitiveDistributed(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    import edges.sparkSession.implicits._
+    distributed(pairsOf(edges).toDF("src", "dst"), maxIter)
+  }
+
+  /** The distinct (src, dst) pairs of `edges` — read against the edge
+    * when `reverse` — as one RDD. It sheds the upstream plan's
     * constraints, which Spark 4.1 carries into checkpoints and then fails
     * to map in the fixpoint's unions ("key not found: src#…"). */
-  private def counted(e: DataFrame): (RDD[(String, String)], Long) = {
-    import e.sparkSession.implicits._
-    val pairs = e.as[(String, String)].rdd
-    (pairs, pairs.count())
+  private def pairsOf(edges: DataFrame, reverse: Boolean = false): RDD[(String, String)] = {
+    import edges.sparkSession.implicits._
+    val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
+    edges.select(col(from).cast("string"), col(to).cast("string"))
+      .distinct().as[(String, String)].rdd
   }
 
   private def adjacency(edges: Array[(String, String)]): Map[String, Seq[String]] =
@@ -90,10 +73,12 @@ object Closure {
   }
 
   /** Exact BFS closure on the driver; None if the closure grows past
-    * `rowLimit` (caller falls back to the distributed fixpoint). */
-  private def driverSide(spark: SparkSession, edges: Array[(String, String)],
-      rowLimit: Long): Option[DataFrame] = {
+    * [[DriverSide.OutputLimit]] (caller falls back to the distributed
+    * fixpoint). */
+  private def driverSide(spark: SparkSession,
+      edges: Array[(String, String)]): Option[DataFrame] = {
     import spark.implicits._
+    val rowLimit = DriverSide.outputLimit
     val adj = adjacency(edges)
     val next = (n: String) => adj.getOrElse(n, Nil)
     val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -169,48 +154,57 @@ object Closure {
   }
 
   /** Nodes reachable from `start` via 1+ edges (forward), or that reach
-    * `start` (reverse). Frontier BFS — driver-side under the limit,
-    * distributed loop otherwise. Used by the SPARQL planner to evaluate
-    * `p*` atoms with a constant endpoint without materializing the full
-    * pairwise closure. */
+    * `start` (reverse). Frontier BFS — on the driver when [[DriverSide]]
+    * collects the edges, a distributed loop otherwise. Used by the SPARQL
+    * planner to evaluate `p*` atoms with a constant endpoint without
+    * materializing the full pairwise closure. */
   def reachableFrom(
       edges: DataFrame, start: String, reverse: Boolean = false,
-      maxIter: Int = 50, driverSideLimit: Long = DriverSideLimit): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col => c}
-    val e0 = edges.select(c("src").cast("string"), c("dst").cast("string")).distinct()
-    val e = if (reverse) e0.select(c("dst").as("src"), c("src").as("dst")) else e0
-    val (pairs, edgeCount) = counted(e)
-    if (edgeCount <= driverSideLimit) {
-      val adj = adjacency(pairs.collect())
-      reachable(start, adj.getOrElse(_, Nil)).toSeq.toDF("node")
-    } else {
-      // every round re-joins the edge set: materialize it once
-      val ec = pairs.toDF("src", "dst").localCheckpoint()
-      // seed with start's direct successors (NOT start itself — start only
-      // belongs in the result if a cycle brings it back)
-      var seen = ec.filter(c("src") === start).select(c("dst").as("node"))
-        .distinct().localCheckpoint()
-      var frontier = seen
-      var iter = 0
-      var growing = !frontier.isEmpty
-      while (growing && iter < maxIter) {
-        iter += 1
-        val next = frontier.join(ec, frontier("node") === ec("src"))
-          .select(ec("dst").as("node")).distinct()
-          .join(seen, Seq("node"), "left_anti").localCheckpoint()
-        if (next.isEmpty) growing = false
-        else { seen = seen.union(next).localCheckpoint(); frontier = next }
-      }
-      // one edge per round here (vertex-level BFS): a diameter > maxIter
-      // graph would silently return a partial reachable set — fail loudly
-      // instead (raise maxIter deliberately for pathological chains)
-      if (growing) throw new IllegalStateException(
-        s"reachableFrom not converged after $maxIter rounds — " +
-          "graph diameter exceeds maxIter")
-      seen
+    val pairs = pairsOf(edges, reverse)
+    DriverSide.collect(pairs) match {
+      case Some(small) =>
+        val adj = adjacency(small)
+        reachable(start, adj.getOrElse(_, Nil)).toSeq.toDF("node")
+      case None => frontierLoop(pairs.toDF("src", "dst"), start, maxIter)
     }
+  }
+
+  /** [[reachableFrom]] through the distributed loop whatever the size. */
+  private[graft] def reachableDistributed(
+      edges: DataFrame, start: String, reverse: Boolean = false,
+      maxIter: Int = 50): DataFrame = {
+    import edges.sparkSession.implicits._
+    frontierLoop(pairsOf(edges, reverse).toDF("src", "dst"), start, maxIter)
+  }
+
+  private def frontierLoop(e: DataFrame, start: String, maxIter: Int): DataFrame = {
+    // every round re-joins the edge set: materialize it once
+    val ec = e.localCheckpoint()
+    // seed with start's direct successors (NOT start itself — start only
+    // belongs in the result if a cycle brings it back)
+    var seen = ec.filter(col("src") === start).select(col("dst").as("node"))
+      .distinct().localCheckpoint()
+    var frontier = seen
+    var iter = 0
+    var growing = !frontier.isEmpty
+    while (growing && iter < maxIter) {
+      iter += 1
+      val next = frontier.join(ec, frontier("node") === ec("src"))
+        .select(ec("dst").as("node")).distinct()
+        .join(seen, Seq("node"), "left_anti").localCheckpoint()
+      if (next.isEmpty) growing = false
+      else { seen = seen.union(next).localCheckpoint(); frontier = next }
+    }
+    // one edge per round here (vertex-level BFS): a diameter > maxIter
+    // graph would silently return a partial reachable set — fail loudly
+    // instead (raise maxIter deliberately for pathological chains)
+    if (growing) throw new IllegalStateException(
+      s"reachableFrom not converged after $maxIter rounds — " +
+        "graph diameter exceeds maxIter")
+    seen
   }
 
   /** Reflexive closure: union zero-length pairs for every node in `nodes`

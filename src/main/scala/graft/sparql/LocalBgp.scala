@@ -1,7 +1,7 @@
 package graft.sparql
 
 import graft.RdfTerms
-import graft.plans.Closure
+import graft.plans.{Closure, DriverSide}
 import org.apache.spark.sql.{DataFrame, Row}
 
 import scala.collection.mutable
@@ -19,7 +19,7 @@ import scala.collection.mutable
   * patterns — it returns exactly BgpPlanner's rows: the same columns,
   * the same bag multiplicities and the same `lex` result boundary.
   * Everything else, and any evaluation whose intermediate state passes
-  * [[Closure.ClosureRowLimit]], stays with BgpPlanner.
+  * [[DriverSide.OutputLimit]], stays with BgpPlanner.
   *
   * Semantics mirrored from BgpPlanner, atom by atom:
   *   - every atom is a SET of (subject, object) pairs and the solutions
@@ -55,18 +55,13 @@ object LocalBgp {
   private val EmptyGraph = new Graph(Map.empty, Map.empty, Set.empty)
 
   object Index {
-    /** Collect `quads` (graph, s, p, o) into an index. None when the
-      * relation holds more than [[Closure.DriverSideLimit]] quads, or a
-      * null term the planner's SQL equality would treat differently.
-      * The size is checked with a count before any row is shipped, so a
-      * graph over the cutoff costs one count (cheap on cached quads). */
+    /** Collect `quads` (graph, s, p, o) into an index. None when
+      * [[DriverSide]] leaves the relation on the cluster, or it holds a
+      * null term the planner's SQL equality would treat differently. */
     def build(quads: DataFrame): Option[Index] =
-      if (quads.count() > Closure.DriverSideLimit) None
-      else {
-        val rows = quads.select("graph", "s", "p", "o").collect()
-        if (rows.exists(r => r.isNullAt(1) || r.isNullAt(2) || r.isNullAt(3))) None
-        else Some(indexOf(rows))
-      }
+      DriverSide.collect(quads.select("graph", "s", "p", "o").rdd)
+        .filterNot(_.exists(r => r.isNullAt(1) || r.isNullAt(2) || r.isNullAt(3)))
+        .map(indexOf)
 
     private def indexOf(rows: Array[Row]): Index = {
       val quad = rows.map(r => (r.getString(0), (r.getString(1), r.getString(2), r.getString(3))))
@@ -104,11 +99,11 @@ object LocalBgp {
 
   /** Rows of `q.selected` for a [[supports]]-ed query over `g`, through
     * the `lex` result boundary. None when an intermediate solution set
-    * or the closures computed pass [[Closure.ClosureRowLimit]], or when
+    * or the closures computed pass [[DriverSide.OutputLimit]], or when
     * a projected variable is bound by no pattern (BgpPlanner reports
     * that error). */
   def evaluate(g: Graph, q: Query): Option[Seq[Array[String]]] = {
-    val rowLimit = Closure.ClosureRowLimit
+    val rowLimit = DriverSide.outputLimit
     var joints = 0
     val atoms = expandAtoms(q.patterns, () => { joints += 1; V(s"_path$joints") })
     val vars = atoms.flatMap(_.vars).distinct

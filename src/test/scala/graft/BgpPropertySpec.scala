@@ -923,13 +923,13 @@ class BgpPropertySpec extends AnyFunSuite {
   test("a cross product past the row limit is abandoned on the driver and planned") {
     val s = spark
     import s.implicits._
-    // 1415² = 2,002,225 solutions: just over Closure.ClosureRowLimit
+    // 1415² = 2,002,225 solutions: just over DriverSide.OutputLimit
     val n = 1415
     val quads = (0 until n).map(i => Quad("urn:g#", s"urn:s$i", "urn:p", "urn:o")).toDF()
     val text = "SELECT ?a ?b WHERE { ?a <urn:p> ?x . ?b <urn:p> ?y }"
     val q = Sparql.parse(text)
     assert(LocalBgp.supports(q))
-    assert(n.toLong * n > graft.plans.Closure.ClosureRowLimit)
+    assert(n.toLong * n > graft.plans.DriverSide.OutputLimit)
     val index = LocalBgp.Index.build(quads).get
     assert(LocalBgp.evaluate(index.union, q).isEmpty)
     val df = new Engine(spark, quads, spark.range(0).toDF()).sparql(text)
@@ -940,7 +940,7 @@ class BgpPropertySpec extends AnyFunSuite {
 
   test("a graph over the driver-side cutoff plans through BgpPlanner") {
     import org.apache.spark.sql.functions._
-    val limit = graft.plans.Closure.DriverSideLimit
+    val limit = graft.plans.DriverSide.InputLimit
     val quads = spark.range(limit + 1).select(lit("urn:g#").as("graph"),
       concat(lit("urn:s"), col("id")).as("s"), lit("urn:p").as("p"),
       concat(lit("urn:o"), col("id")).as("o"))

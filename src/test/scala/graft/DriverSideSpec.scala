@@ -1,0 +1,104 @@
+package graft
+
+import graft.operators.Dedup
+import graft.plans.{Closure, DriverSide}
+import graft.sparql.LocalBgp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The one driver-side cutoff ([[DriverSide]]). With a small limit set
+  * through its test seam, each of its four callers takes its distributed
+  * plan over the cutoff (the reference the driver-side answers are
+  * property-checked against): its rows equal the driver-side answer, and
+  * the relation is ruled out by a count — no
+  * task returns more than metrics and a row, where a collect of the
+  * relation returns hundreds of KB from one task. Broadcast joins are off
+  * while a call runs over the cutoff: they route their small side
+  * through the driver by design, which is not the collect ruled out here. */
+class DriverSideSpec extends AnyFunSuite {
+
+  lazy val spark = TestSpark.spark
+
+  import TestSpark.sparkWorkDuring
+
+  private val Limit = 100L
+
+  /** Bytes one task may return over the cutoff. Each relation below is
+    * megabytes, so a collect of it returns more from at least one of its
+    * few tasks; counts, checkpoints and the fixpoints' emptiness probes
+    * return a few KB of metrics and at most one row. */
+  private val Bound = 64L * 1024
+
+  /** `body` over the cutoff, and the most bytes one of its tasks shipped. */
+  private def overCutoff[T](body: => T): (T, Long) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try onDriver(DriverSide.withLimits(Limit, Limit)(body))
+    finally spark.conf.set(key, prev)
+  }
+
+  /** `body` at the default limits, and the most bytes one of its tasks
+    * shipped. */
+  private def onDriver[T](body: => T): (T, Long) = {
+    val (out, _, shipped) = sparkWorkDuring(body)
+    (out, shipped.max)
+  }
+
+  /** A node name, long enough that collecting thousands of them shows. */
+  private def node(prefix: String, id: org.apache.spark.sql.Column) =
+    concat(lit(s"urn:$prefix:${"x" * 200}:"), id.cast("string"))
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  test("closures over the cutoff run the distributed plans without collecting the edges") {
+    // a → b → c for 1,000 chains: two-edge paths, so the fixpoints converge fast
+    val ids = spark.range(1000).select(col("id"))
+    val edges = ids.select(node("a", col("id")).as("src"), node("b", col("id")).as("dst"))
+      .union(ids.select(node("b", col("id")).as("src"), node("c", col("id")).as("dst")))
+    val (driver, collected) = onDriver(Closure.transitive(edges))
+    assert(collected > Bound, s"a collect of the edges shipped at most $collected bytes from one task")
+    val (cluster, shipped) = overCutoff(Closure.transitive(edges))
+    assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
+    assert(rows(cluster) == rows(driver) && rows(driver).size == 3000)
+
+    val star = ids.select(lit("urn:root").as("src"), node("b", col("id")).as("dst"))
+      .union(ids.select(node("b", col("id")).as("src"), node("c", col("id")).as("dst")))
+    val (near, collectedFrom) = onDriver(Closure.reachableFrom(star, "urn:root"))
+    assert(collectedFrom > Bound)
+    val (reached, shippedFrom) = overCutoff(Closure.reachableFrom(star, "urn:root"))
+    assert(shippedFrom < Bound, s"$shippedFrom result bytes reached the driver from one task")
+    assert(rows(reached) == rows(near) && rows(near).size == 2000)
+  }
+
+  test("a graph over the cutoff is not indexed on the driver and plans through BgpPlanner") {
+    val quads = spark.range(1000).select(lit("urn:g#").as("graph"),
+      node("s", col("id")).as("s"), lit("urn:p").as("p"), node("o", col("id")).as("o"))
+      .cache()
+    try {
+      val (index, shipped) = overCutoff(LocalBgp.Index.build(quads))
+      assert(index.isEmpty)
+      assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
+      val (built, collected) = onDriver(LocalBgp.Index.build(quads))
+      assert(built.nonEmpty && collected > Bound)
+      val q = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
+      val planned = DriverSide.withLimits(Limit, Limit)(
+        new Engine(spark, quads, spark.range(0).toDF()).sparql(q))
+      val local = new Engine(spark, quads, spark.range(0).toDF()).sparql(q)
+      assert(rows(planned) == rows(local) && rows(local).size == 1000)
+    } finally quads.unpersist()
+  }
+
+  test("connected components over the cutoff run the distributed loop without collecting the pairs") {
+    // 20,000 two-node components and some isolated nodes
+    val pairs = spark.range(20000).select((col("id") * 2).as("id_a"), (col("id") * 2 + 1).as("id_b"))
+    val nodes = spark.range(40010).toDF("id")
+    val (driver, collected) = onDriver(Dedup.connectedComponents(nodes, "id", pairs))
+    assert(collected > Bound, s"a collect of the pairs shipped at most $collected bytes from one task")
+    val (cluster, shipped) = overCutoff(Dedup.connectedComponents(nodes, "id", pairs))
+    assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
+    val want = rows(driver)
+    assert(rows(cluster) == want && want.size == 40010)
+  }
+}

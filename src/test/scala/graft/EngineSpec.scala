@@ -3,15 +3,12 @@ package graft
 import graft.plans.BoundParams
 import graft.sparql.LocalBgp
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, FilterExec}
 import org.apache.spark.sql.execution.datasources.FileSourceStrategy
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** The flagship's first level runs on the driver: once the graph index is
   * built, a conjunctive `dataSparql` reaches its pruned scan without a
@@ -20,34 +17,7 @@ class EngineSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
 
-  private val Tag = "graft.test.jobs"
-
-  /** `body`'s result, the Spark jobs submitted while it ran and the bytes
-    * their tasks returned to the driver. Listener events arrive
-    * asynchronously, in order: a tagged sentinel job seen by the listener
-    * means every earlier job start and task end has been seen too. */
-  def sparkWorkDuring[T](body: => T): (T, Int, Long) = {
-    val sc = spark.sparkContext
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val shipped = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).getOrElse(""))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => shipped.addAndGet(m.resultSize))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(Tag, "sentinel")
-      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(tags.contains("sentinel"), "listener never saw the sentinel job")
-      // the sentinel's own one-row count adds a few bytes at most
-      (out, tags.asScala.count(_ != "sentinel"), shipped.get())
-    } finally sc.removeSparkListener(listener)
-  }
+  import TestSpark.sparkWorkDuring
 
   def jobsDuring[T](body: => T): (T, Int) = {
     val (out, jobs, _) = sparkWorkDuring(body)
@@ -145,15 +115,16 @@ class EngineSpec extends AnyFunSuite {
 
   test("a graph over the cutoff is ruled out by a count, without shipping its quads") {
     import org.apache.spark.sql.functions._
-    val limit = graft.plans.Closure.DriverSideLimit
+    val limit = graft.plans.DriverSide.InputLimit
     val quads = spark.range(limit + 1).select(lit("urn:g#").as("graph"),
       concat(lit("urn:s"), col("id")).as("s"), lit("urn:p").as("p"),
       concat(lit("urn:o"), col("id")).as("o")).cache()
     try {
       quads.count()
-      val (index, _, shipped) = sparkWorkDuring(LocalBgp.Index.build(quads))
+      val (index, _, results) = sparkWorkDuring(LocalBgp.Index.build(quads))
       assert(index.isEmpty)
       // the quads are megabytes even compressed; a count's tasks return bytes
+      val shipped = results.sum
       assert(shipped < 256 * 1024, s"$shipped result bytes reached the driver")
     } finally quads.unpersist()
   }

@@ -631,7 +631,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val pairs = edges.toDF("id_a", "id_b")
     val fast = Dedup.connectedComponents(nodes, "id", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dist = Dedup.connectedComponents(nodes, "id", pairs, driverSideLimit = 0)
+    val dist = Dedup.connectedComponentsDistributed(nodes, "id", pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fast == dist)
   }

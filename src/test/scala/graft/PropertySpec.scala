@@ -49,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
       val expect = reachability(edges)
       val driver = Closure.transitive(df).as[(String, String)].collect().toSet
       assert(driver == expect, s"driver-side closure wrong for $edges")
-      val dist = Closure.transitive(df, driverSideLimit = 0).as[(String, String)].collect().toSet
+      val dist = Closure.transitiveDistributed(df).as[(String, String)].collect().toSet
       assert(dist == expect, s"distributed closure wrong for $edges")
     }
   }

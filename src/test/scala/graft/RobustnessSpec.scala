@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.plans.Closure
+import graft.plans.{Closure, DriverSide}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,7 +24,8 @@ class RobustnessSpec extends AnyFunSuite {
     // 80-node chain: 79 edges, closure = 79·80/2 = 3160 pairs — the edge
     // count passes the driver-side cutover but the RESULT trips the cap
     val edges = (1 until 80).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
-    val viaFallback = Closure.transitive(edges, closureRowLimit = 100)
+    val viaFallback = DriverSide.withLimits(DriverSide.InputLimit, output = 100)(
+      Closure.transitive(edges))
     assert(viaFallback.count() == 3160)
     // and it must agree exactly with the unconstrained driver-side BFS
     val viaDriver = Closure.transitive(edges)
@@ -60,8 +61,8 @@ class RobustnessSpec extends AnyFunSuite {
       .cache()
     try {
       val edges = quads.filter(col("p") === "next").select(col("s").as("src"), col("o").as("dst"))
-      assert(Closure.transitive(edges, driverSideLimit = 0).count() == 30)
-      assert(Closure.reachableFrom(edges, "a3", driverSideLimit = 0).count() == 2)
+      assert(Closure.transitiveDistributed(edges).count() == 30)
+      assert(Closure.reachableDistributed(edges, "a3").count() == 2)
     } finally quads.unpersist()
   }
 
@@ -87,9 +88,9 @@ class RobustnessSpec extends AnyFunSuite {
     val nodes = (0L to 11L).map(Tuple1(_)).toDF("id")
     val pairs = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      // driverSideLimit = 0 forces the distributed fixpoint (the driver
-      // union-find fast path would solve any chain in one pass)
-      Dedup.connectedComponents(nodes, "id", pairs, maxIter = 3, driverSideLimit = 0)
+      // the distributed fixpoint (the driver union-find fast path would
+      // solve any chain in one pass)
+      Dedup.connectedComponentsDistributed(nodes, "id", pairs, maxIter = 3)
     }
     assert(e.getMessage.contains("not converged"))
     // with enough rounds the same chain collapses to a single component
@@ -822,23 +823,26 @@ class RobustnessSpec extends AnyFunSuite {
       empty, "text", "doc_id", bPath).count() == 0L)
   }
 
-  test("graft.fanout.bytesPerTask: a bad value fails naming the key; " +
-      "unset uses the default") {
-    val key = operators.FanOut.BytesPerTaskKey
-    val df = spark.range(10).toDF()
-    try {
-      Seq("abc", "0", "-5", "").foreach { bad =>
-        spark.conf.set(key, bad)
-        val e = intercept[IllegalArgumentException](
-          operators.FanOut.fanOutSmall(df))
-        assert(e.getMessage.contains(key), e.getMessage)
-        assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
-      }
-      spark.conf.set(key, " 4096 ")
-      assert(operators.FanOut.bytesPerTask(spark) == 4096L)
-      spark.conf.unset(key)
-      assert(operators.FanOut.bytesPerTask(spark) == (64L << 10))
-      assert(operators.FanOut.fanOutSmall(df).count() == 10L)
-    } finally spark.conf.unset(key)
+  test("the graft conf keys fail naming the key on a bad value") {
+    val s = spark; import s.implicits._
+    val path = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_robconf_${java.util.UUID.randomUUID()}")
+    val batch = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
+    operators.DedupIndex.writeExactIndex(batch, "text", "doc_id", path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    val cases: Seq[(String, String, () => Unit)] = Seq(
+      (operators.DedupIndex.MaxBroadcastBytesKey, "512MB", () =>
+        operators.DedupIndex.admitAgainstIndex(batch, "text", "doc_id", path)),
+      ("spark.graft.index.allowNonAtomicRename", "yes", () =>
+        operators.DedupIndex.requireAtomicRenameFs(s, fs, root, "spec")))
+    cases.foreach { case (key, bad, use) =>
+      s.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](use())
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally s.conf.unset(key)
+      use()
+    }
   }
 }

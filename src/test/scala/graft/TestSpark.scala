@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -24,6 +27,36 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val Tag = "graft.test.jobs"
+
+  /** `body`'s result, the Spark jobs submitted while it ran and the bytes
+    * each of their tasks returned to the driver. Listener events arrive
+    * asynchronously, in order: a tagged sentinel job seen by the listener
+    * means every earlier job start and task end has been seen too. */
+  def sparkWorkDuring[T](body: => T): (T, Int, Seq[Long]) = {
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val shipped = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).getOrElse(""))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shipped.add(m.resultSize))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(Tag, "sentinel")
+      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(5)
+      if (!tags.contains("sentinel"))
+        throw new AssertionError("listener never saw the sentinel job")
+      // the sentinel's own one-row count adds a few bytes at most
+      (out, tags.asScala.count(_ != "sentinel"), shipped.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
   }
 }
 
