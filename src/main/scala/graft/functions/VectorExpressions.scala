@@ -16,7 +16,10 @@ import org.apache.spark.sql.types._
   * 675k-pair × 64-dim scoring spent seconds in `ArrayTransform.eval`).
   * These expressions generate a tight primitive loop inside whole-stage
   * codegen (with an equally tight interpreted fallback), reading float or
-  * double arrays directly.
+  * double arrays directly. The cosine and fixed-point kernels are one
+  * scalar function each ([[cosine]], [[subL2SqFp6]]) that the generated
+  * code, the interpreted path and driver-side scoring all call, so the
+  * three cannot drift apart by a rounding step.
   *
   * Accumulation order is sequential left-to-right, matching both the HOF
   * formulation and DuckDB's `list_cosine_similarity` on DOUBLE[] — results
@@ -34,6 +37,44 @@ object VectorExpressions {
     case FloatType => arr.getFloat(i).toDouble
     case DoubleType => arr.getDouble(i)
     case _ => throw new IllegalArgumentException(s"unsupported element type $et")
+  }
+
+  private def isFloat(et: DataType): Boolean = et == FloatType
+
+  @inline private def at(arr: ArrayData, float: Boolean, i: Int): Double =
+    if (float) arr.getFloat(i).toDouble else arr.getDouble(i)
+
+  /** cosine(x, y) = dot / (sqrt(Σx²)·sqrt(Σy²)) over min(len) elements,
+    * fused into one pass; `xFloat`/`yFloat` say whether each array holds
+    * floats or doubles. The one implementation behind `vec_cosine`'s eval
+    * and generated code and every caller that scores outside a plan. */
+  def cosine(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = at(x, xFloat, i); val yv = at(y, yFloat, i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Σ over i ∈ [start, start+len) of (floor(x_i·10⁶) − floor(y_i·10⁶))²,
+    * clamped to both arrays: the one implementation behind
+    * `vec_subl2sq_fp6` ([[SubvectorL2SqFp6]]) and every caller that
+    * scores outside a plan. */
+  def subL2SqFp6(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean,
+      start: Int, len: Int): Long = {
+    val end = math.min(start + len, math.min(x.numElements(), y.numElements()))
+    var acc = 0L
+    var i = math.max(start, 0)
+    while (i < end) {
+      val d = math.floor(at(x, xFloat, i) * 1e6).toLong - math.floor(at(y, yFloat, i) * 1e6).toLong
+      acc += d * d
+      i += 1
+    }
+    acc
   }
 
   abstract class VectorBinary extends BinaryExpression {
@@ -86,35 +127,14 @@ object VectorExpressions {
   case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinary {
     override def prettyName: String = "vec_cosine"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val n = math.min(x.numElements(), y.numElements())
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = elemAt(leftElem, x, i); val yv = elemAt(rightElem, y, i)
-        dot += xv * yv; na += xv * xv; nb += yv * yv
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      cosine(a.asInstanceOf[ArrayData], isFloat(leftElem),
+        b.asInstanceOf[ArrayData], isFloat(rightElem))
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $xv = ${elemGetter(leftElem, a, i)};
-           |  double $yv = ${elemGetter(rightElem, b, i)};
-           |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-           |}
-           |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = graft.functions.VectorExpressions.cosine(" +
+          s"$a, ${isFloat(leftElem)}, $b, ${isFloat(rightElem)});")
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -223,39 +243,14 @@ object VectorExpressions {
     private def aElem: DataType = first.dataType.asInstanceOf[ArrayType].elementType
     private def bElem: DataType = second.dataType.asInstanceOf[ArrayType].elementType
 
-    override def nullSafeEval(a: Any, b: Any, s: Any): Any = {
-      val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      val start = s.asInstanceOf[Number].intValue()
-      val end = math.min(start + len, math.min(x.numElements(), y.numElements()))
-      var acc = 0L
-      var i = math.max(start, 0)
-      while (i < end) {
-        val d = math.floor(elemAt(aElem, x, i) * 1e6).toLong -
-          math.floor(elemAt(bElem, y, i) * 1e6).toLong
-        acc += d * d
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any, s: Any): Any =
+      subL2SqFp6(a.asInstanceOf[ArrayData], isFloat(aElem),
+        b.asInstanceOf[ArrayData], isFloat(bElem), s.asInstanceOf[Number].intValue(), len)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b, s) => {
-        val st = ctx.freshName("start"); val end = ctx.freshName("end")
-        val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        s"""
-           |int $st = (int) $s;
-           |int $end = java.lang.Math.min($st + $len,
-           |  java.lang.Math.min($a.numElements(), $b.numElements()));
-           |long $acc = 0L;
-           |for (int $i = java.lang.Math.max($st, 0); $i < $end; $i++) {
-           |  long $d = (long) java.lang.Math.floor(${elemGetter(aElem, a, i)} * 1e6)
-           |    - (long) java.lang.Math.floor(${elemGetter(bElem, b, i)} * 1e6);
-           |  $acc += $d * $d;
-           |}
-           |${ev.value} = $acc;
-           |""".stripMargin
-      })
+      nullSafeCodeGen(ctx, ev, (a, b, s) =>
+        s"${ev.value} = graft.functions.VectorExpressions.subL2SqFp6(" +
+          s"$a, ${isFloat(aElem)}, $b, ${isFloat(bElem)}, (int) $s, $len);")
 
     override protected def withNewChildrenInternal(
         f: Expression, sec: Expression, t: Expression): Expression =

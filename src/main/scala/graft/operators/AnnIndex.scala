@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** PERSISTED ANN index + query-time serving (round 14) — the
+/** PERSISTED ANN index + query-time serving — the
   * [[DedupIndex]] operational pattern applied to embeddings.
   *
   * Every ANN driver query ([[Similarity.ivfPqTopK]] and friends)
@@ -24,13 +24,27 @@ import org.apache.spark.sql.functions._
   *     its inverted lists — dynamic partition pruning does at serving
   *     time what the in-memory operator needs a join for.
   *
-  * Query-time plan ([[queryIvfPqIndex]]): probes and the ADC table are
-  * broadcast (both query-batch-sized); the codes relation is read ONLY
-  * at the probed cid partitions, scored by summing broadcast table
-  * entries, ranked by the k-bounded heap. No corpus-sized shuffle, no
-  * raw-vector re-read, no re-encode — serving cost ∝ (probed fraction)
-  * × (m longs per vector). At extreme nlist (10⁶+ physical partitions)
-  * swap `partitionBy` for bucketing; the join shape is unchanged.
+  * Query-time plan ([[queryIvfPqIndex]]): two paths, one answer.
+  *   - When the quantizer's rows plus the probed lists' rows, counted
+  *     from parquet footers before any row ships, fit
+  *     [[graft.plans.DriverSide]]'s one cutoff (200,000 rows), the
+  *     driver serves ([[IvfPqOnDriver]]): one collect of the quantizer,
+  *     probes picked in-process, one collect of only the probed lists'
+  *     codes, ADC scoring and ranking in-process — two Spark jobs and no
+  *     schema inference, returned as a local relation.
+  *   - Over the cutoff, a Spark plan: probes and the ADC table are
+  *     broadcast (both query-batch-sized); the codes relation is read
+  *     ONLY at the probed cid partitions, scored by summing broadcast
+  *     table entries, ranked by the k-bounded heap.
+  * Neither path shuffles anything corpus-sized, re-reads raw vectors or
+  * re-encodes — serving cost ∝ (probed fraction) × (m longs per
+  * vector). Nothing is cached between calls: appends, folds and
+  * compactions change the index between nearly every pair of query
+  * batches in a day-2 loop, so a snapshot keyed by index version would
+  * reload on almost every call, while reading only the probed lists
+  * already bounds a call's cost. At extreme nlist (10⁶+ physical
+  * partitions) swap `partitionBy` for bucketing; the join shape is
+  * unchanged.
   *
   * Determinism: built from the same mod-seeded centroids, fixed-cell
   * codebook, two-level assignment and integer-exact ADC as the
@@ -111,17 +125,18 @@ object AnnIndex {
       Map("m" -> m, "dim" -> dim, "twoLevel" -> (if (twoLevel) 1 else 0)))
   }
 
-  /** The two-level routing structure for a persisted index root
-    * (round 18): prefer the PERSISTED super set at `path/supers` —
-    * frozen at build time, so the routing stays stable while the
-    * centroid relation evolves under [[splitHotLists]] — with the
-    * centroid→super map derived per use over the CURRENT centroids
+  /** The two-level routing structure for a persisted index root:
+    * prefer the PERSISTED super set at `path/supers` — frozen at build
+    * time, so the routing stays stable while the centroid relation
+    * evolves under [[splitHotLists]] — with the centroid→super map
+    * derived per use over the CURRENT centroids
     * ([[Similarity.superMap]]: split children enter one group by the
     * same nearest-super rule; all other routings unchanged). A legacy
     * root without `supers/` falls back to the rank-derivation over the
     * centroid relation — identical while the centroid set is the
     * build-time one (the only state a legacy root can be in, since
-    * splits REQUIRE the persisted set). */
+    * splits REQUIRE the persisted set). [[IvfPqOnDriver]] mirrors both
+    * branches. */
   private def superStructureAt(
       spark: org.apache.spark.sql.SparkSession, path: String,
       cents: DataFrame): (DataFrame, DataFrame) = {
@@ -384,33 +399,26 @@ object AnnIndex {
   }
 
   /** [[listBalanceReport]] computed from PARQUET FOOTERS instead of a
-    * Spark scan (round 17 — the truly metadata-bound monitor): per-list
-    * row counts come from each file's footer `num_rows`, read directly
-    * through the FS, keyed by the `cid=` partition directory the file
-    * sits in. Byte-identical values to the scan report (the arithmetic
-    * is [[balanceArithmetic]], shared; spec-asserted, and q194's oracle
-    * is q191's verbatim).
+    * Spark scan — the metadata-bound monitor: per-list row counts come
+    * from each file's footer `num_rows`, keyed by the `cid=` partition
+    * directory the file sits in. Byte-identical values to the scan
+    * report (the arithmetic is [[balanceArithmetic]], shared;
+    * spec-asserted, and q194's oracle is q191's verbatim).
     *
-    * Why it exists, and why the RAW read: the scan report honestly
-    * measured NO cheaper than a data scan at toy file sizes (round-16
-    * IndexProbe: 11.4 s vs 6.6 s over 457 tiny-file lists at 100×) —
-    * Spark's per-file scan machinery dominates when files are small.
-    * The first footer implementation went through
-    * `ParquetFileReader.open` and measured WORSE (7.3 ms/file warm —
-    * reader construction + full metadata conversion, not IO); the raw
-    * read here — tail 8 bytes for footer length + magic, one footer
-    * read, one thrift `FileMetaData` parse for `num_rows` — measures
-    * 0.09 ms/file, 80× less, which finally makes the report cheap at
-    * ANY file granularity: exactly the reference's footer-only
-    * planning (make-metadata.py:13-18). Reads go through the raw FS
-    * (checksum layer skipped — the footer length/magic validate the
-    * bytes), and BOTH the per-dir file listing and the footer reads
-    * run inside the tasks: the driver only lists the `cid=` partition
-    * DIRECTORIES (nlist entries, one listStatus per parent — the
-    * second implementation's driver-side recursive file crawl through
-    * Hadoop LocalFS measured ~4 ms/file and dominated the whole
-    * report; Spark's own scans avoid exactly this with distributed
-    * listing past 32 dirs). */
+    * Why it exists, and why the RAW read: the scan report measured no
+    * cheaper than a data scan at toy file sizes (11.4 s vs 6.6 s over
+    * 457 tiny-file lists at 100×) — Spark's per-file scan machinery
+    * dominates when files are small. `ParquetFileReader.open` measured
+    * worse still (7.3 ms/file warm — reader construction + full
+    * metadata conversion, not IO); the raw footer read
+    * ([[graft.sources.ParquetFiles.footer]]) measures 0.09 ms/file,
+    * which makes the report cheap at ANY file granularity: exactly the
+    * reference's footer-only planning (make-metadata.py:13-18). BOTH
+    * the per-dir file listing and the footer reads run inside the
+    * tasks: the driver only lists the `cid=` partition DIRECTORIES
+    * (nlist entries, one listStatus per parent — a driver-side
+    * recursive file crawl through Hadoop LocalFS measured ~4 ms/file
+    * and dominated the whole report). */
   def listBalanceReportFromFooters(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -447,38 +455,13 @@ object AnnIndex {
         var raw: org.apache.hadoop.fs.FileSystem = null
         it.map { case (cid, dir) =>
           val dp = new Path(dir)
-          if (raw == null) raw = (dp.getFileSystem(conf) match {
-            case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-              c.getRawFileSystem
-            case other => other
-          })
+          if (raw == null) raw = graft.sources.ParquetFiles.raw(dp.getFileSystem(conf))
           var rows = 0L
           raw.listStatus(dp).foreach { f =>
             val name = f.getPath.getName
             if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-                !name.endsWith(".crc")) {
-              val len = f.getLen
-              val in = raw.open(f.getPath)
-              try {
-                require(len > 12, s"${f.getPath}: too short to be parquet")
-                in.seek(len - 8)
-                val tail = new Array[Byte](8)
-                in.readFully(tail)
-                require(tail(4) == 'P' && tail(5) == 'A' &&
-                    tail(6) == 'R' && tail(7) == '1',
-                  s"${f.getPath}: bad parquet magic (encrypted footers " +
-                    "unsupported here)")
-                val fl = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-                  ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-                require(fl > 0 && fl <= len - 12,
-                  s"${f.getPath}: bad footer length $fl")
-                in.seek(len - 8 - fl)
-                val fb = new Array[Byte](fl)
-                in.readFully(fb)
-                rows += org.apache.parquet.format.Util.readFileMetaData(
-                  new java.io.ByteArrayInputStream(fb)).getNum_rows
-              } finally in.close()
-            }
+                !name.endsWith(".crc"))
+              rows += graft.sources.ParquetFiles.footer(raw, f).getNum_rows
           }
           (cid, rows)
         }
@@ -780,7 +763,7 @@ object AnnIndex {
   }
 
   /** SemDeDup-style EMBEDDING near-dup ADMISSION against the persisted
-    * index (round 15 — completes the admission trilogy: exact text
+    * index (completes the admission trilogy: exact text
     * [[DedupIndex.admitAgainstIndex]], verified text near-dup
     * [[DedupIndex.admitNearDupAgainstIndex]], and now semantic/embedding
     * near-dup): for every batch vector, the index proposes a `shortK`
@@ -809,7 +792,8 @@ object AnnIndex {
       twoLevel: Boolean = false, tauBp: Long = 9900L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       excludeIds: Option[DataFrame] = None): DataFrame = {
-    // excludeIds (round 15, replay safety for the streaming form): index
+    require(shortK > 0, s"shortK must be positive, got $shortK")
+    // excludeIds (replay safety for the streaming form): index
     // ids dropped from the shortlist BEFORE the exact re-score — a
     // replayed micro-batch excludes its own ids, so its earlier
     // codes_stream/vector-store appends can never make a vector its own
@@ -822,7 +806,7 @@ object AnnIndex {
       shortlist0.join(
         broadcast(ex.select(ex.columns.head).toDF("_exid")),
         col("nid") === col("_exid"), "left_anti"))
-    // decision arithmetic (round 16): the threshold is an INTEGER
+    // decision arithmetic: the threshold is an INTEGER
     // basis-point comparison on the UNROUNDED exact cosine —
     // floor(cos·10⁴) ≥ tauBp ⟺ cos·10⁴ ≥ tauBp for integer tauBp, with
     // no display rounding in between (rankTopK's 4-decimal rounding
@@ -1033,16 +1017,45 @@ object AnnIndex {
     * results to [[Similarity.ivfPqTopK]] over the same corpus/centroids/
     * codebook. `twoLevel` shapes only the QUERY probe here (the corpus
     * assignment is baked into the index at build time) — pass the same
-    * value as the build so probe and list geometry stay consistent. */
+    * value as the build so probe and list geometry stay consistent.
+    * `k` and `nProbe` must be positive.
+    *
+    * Which path answers ([[IvfPqOnDriver]]): when the quantizer's rows
+    * and the probed lists' rows, counted from their parquet footers, fit
+    * [[graft.plans.DriverSide]]'s one cutoff (200,000 rows), the driver
+    * reads the quantizer in one collect, picks each query's probes,
+    * reads only the probed lists in a second collect, scores and ranks,
+    * and returns a local relation — two Spark jobs where the plan below
+    * runs about fifteen. Over the cutoff the plan below runs. There is
+    * no cache of index state across calls: in a day-2 loop an append
+    * lands before nearly every query batch, so a snapshot keyed by
+    * index version would reload on almost every call, and reading only
+    * the probed lists already keeps a call's cost ∝ the lists probed.
+    * The plan returns rows whose scan metrics show the lists it read; a
+    * local relation has no scan. */
   def queryIvfPqIndex(
       queries: DataFrame, path: String, m: Int, dim: Int, k: Int,
       nProbe: Int = 2, twoLevel: Boolean = false,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must be a multiple of m=$m")
+    require(k > 0, s"k must be positive, got $k")
+    require(nProbe > 0, s"nProbe must be positive, got $nProbe")
     val spark = queries.sparkSession
     DedupIndex.checkMeta(spark, path, "ivfpq",
       Map("m" -> m, "dim" -> dim, "twoLevel" -> (if (twoLevel) 1 else 0)))
     val dsub = dim / m
+    IvfPqOnDriver.serve(queries, path, dsub, k, nProbe, twoLevel, idCol, vecCol)
+      .getOrElse(queryIvfPqPlan(queries, path, dsub, k, nProbe, twoLevel, idCol, vecCol))
+  }
+
+  /** [[queryIvfPqIndex]] as a Spark plan: probes and the ADC table are
+    * broadcast (both query-batch-sized); the codes relation is read only
+    * at the probed cid partitions, scored by summing broadcast table
+    * entries and ranked by the k-bounded heap. */
+  private def queryIvfPqPlan(
+      queries: DataFrame, path: String, dsub: Int, k: Int, nProbe: Int,
+      twoLevel: Boolean, idCol: String, vecCol: String): DataFrame = {
+    val spark = queries.sparkSession
     val cents = spark.read.parquet(s"$path/centroids")
     val cb = broadcast(spark.read.parquet(s"$path/codebook"))
     val probes =
@@ -1063,8 +1076,8 @@ object AnnIndex {
     val sFs = sPath.getFileSystem(spark.sessionState.newHadoopConf())
     val hasStream = sFs.exists(sPath)
     // stream partitions already FOLDED into the base are skipped by
-    // marker (round 17, foldStreamIntoCodes) — a partition-pruning
-    // filter, so the skipped batches' files are never touched
+    // marker (foldStreamIntoCodes) — a partition-pruning filter, so the
+    // skipped batches' files are never touched
     val folded = if (hasStream) foldedBatchIds(sFs, s"$path/codes").toSeq
                  else Seq.empty
     val rels = Seq(spark.read.parquet(s"$path/codes")) ++

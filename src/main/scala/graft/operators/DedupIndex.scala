@@ -146,10 +146,13 @@ object DedupIndex {
       kind: String, params: Map[String, Int]): Unit = {
     import spark.implicits._
     // a sentinel row keeps the relation non-empty for param-less kinds
-    // (exact) — the kind column must survive for the kind check
+    // (exact) — the kind column must survive for the kind check. One
+    // file: every index call reads it back file by file (readMeta, ~12
+    // ms a file), and the local rows would otherwise land in one file
+    // per core.
     ((("_kind", 0) +: params.toSeq.sortBy(_._1))
       .map { case (k, v) => (kind, k, v) })
-      .toDF("kind", "param", "value")
+      .toDF("kind", "param", "value").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_graft_meta")
   }
 
@@ -296,11 +299,10 @@ object DedupIndex {
     * and the pending tombstone count. The check an operator runs before
     * deciding append vs compact vs rebuild. Metadata-only: a listing
     * plus the two tiny underscore relations; index DATA is never
-    * scanned. Cost note (round-17 measurement): the recursive listing
-    * itself has a per-FILE constant (~4 ms/file through Hadoop LocalFS)
-    * — at a 10k-file index this one-off ops check costs tens of
-    * seconds; the hot-path monitors ([[AnnIndex.listBalanceReportFromFooters]])
-    * distribute their listing per partition dir instead. Output:
+    * scanned. The listing walks the raw filesystem
+    * ([[graft.sources.ParquetFiles.walk]]), so it costs well under a
+    * millisecond a file on a local store, where Hadoop's recursive
+    * `listFiles` paid ~4 ms a file. Output:
     * (path, kind, params, n_data_files, data_bytes, n_tombstones,
     * has_stream_checkpoint). */
   def describeIndex(spark: SparkSession, path: String): DataFrame = {
@@ -315,9 +317,7 @@ object DedupIndex {
     // dot/underscore ANCESTOR dir (…/.cache/…, …/_indexes/…) would
     // misclassify every data file as a sidecar
     val qroot = fs.makeQualified(root).toString
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
+    graft.sources.ParquetFiles.walk(fs, root).foreach { f =>
       val rel = f.getPath.toString.stripPrefix(qroot)
       // any underscore-prefixed segment BELOW the root = sidecar
       val sidecar = rel.split('/').exists(seg =>

@@ -45,9 +45,9 @@ import org.apache.spark.sql.functions._
   * Scale posture: the DECISION reads are metadata-bound AND
   * distributed. The first implementation read
   * [[DedupIndex.describeIndex]] for the ANN branch too — its
-  * driver-side recursive listing measured 39 s at 100× (9 000+ files
-  * at LocalFS's ~4 ms/file) for a decision the footer report makes in
-  * 0.5 s; the ANN branch now reads only `_graft_meta` (1 row), the
+  * driver-side recursive listing, then Hadoop's `listFiles`, measured
+  * 39 s at 100× (9 000+ files at LocalFS's ~4 ms/file) for a decision
+  * the footer report makes in 0.5 s; the ANN branch now reads only `_graft_meta` (1 row), the
   * tombstone id count (deletions-sized), the distributed per-dir file
   * count ([[AnnIndex.codesDataFileCount]]) and the raw-thrift footer
   * balance report — the driver never lists files, only partition dirs.
@@ -172,8 +172,8 @@ object Maintenance {
     val kind = DedupIndex.readMeta(spark, path).map(_._1).getOrElse("legacy")
     // dedup-family roots: one describe read (single-relation roots,
     // compaction-bounded file counts). Lazy — the ANN branch must NOT
-    // pay describeIndex's driver-side recursive listing (measured 39 s
-    // at 100×; see the scaladoc) and reads its surfaces distributed.
+    // pay describeIndex's driver-side recursive listing of every file
+    // (see the scaladoc) and reads its surfaces distributed.
     lazy val desc = DedupIndex.describeIndex(spark, path).head()
     lazy val nFiles = desc.getLong(3)
     lazy val nTombstones = desc.getLong(5)

@@ -31,7 +31,7 @@ object Similarity {
     * the aggregate's map-side partials put at most k rows per query per
     * input partition on the wire. Ties broken by ascending id, identical
     * to `ORDER BY score DESC, nid`. `roundScore = false` surfaces the
-    * raw double (round 16): decision consumers — the embedding
+    * raw double: decision consumers — the embedding
     * admission threshold — must compare the UNROUNDED cosine, or a
     * score in [τ−5e-5, τ) rounds up across the boundary and diverges
     * from any exact re-derivation. Ranking itself is identical either
@@ -246,7 +246,7 @@ object Similarity {
 
   /** The centroid → super routing map for a GIVEN super set: each
     * centroid to its nearest super (ties → smallest sid). Factored out
-    * (round 18) so a persisted super set ([[AnnIndex]] `supers/` —
+    * so a persisted super set ([[AnnIndex]] `supers/` —
     * frozen at build time, stable under hot-list splits) derives its
     * map over the CURRENT centroid relation: split children enter the
     * map by the same rule, every other centroid's routing is unchanged
@@ -311,13 +311,13 @@ object Similarity {
       .drop("cvec", "csim", "crank")
   }
 
-  /** Two-level query probe (round 14): a query resolves its nearest
+  /** Two-level query probe: a query resolves its nearest
     * SUPER (broadcast `supers`, ~N^¼ rows — ties → smallest sid), then
     * takes its `nProbe` nearest centroids WITHIN that super's member
     * group — the same hierarchical routing the corpus assignment uses,
     * so no √N-row relation is broadcast anywhere in the two-level plan
-    * (the round-13 flat probe shipped the full nlist centroid table to
-    * every executor). The query side of the member join IS broadcast —
+    * (the flat probe ships the full nlist centroid table to every
+    * executor). The query side of the member join IS broadcast —
     * it is genuinely tiny — so `cmap` streams once, never shuffles the
     * corpus. Recall trade: probes come from one member group, so a
     * query on a super boundary can miss a neighboring group's list

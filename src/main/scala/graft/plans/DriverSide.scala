@@ -13,7 +13,11 @@ import scala.util.DynamicVariable
   * [[Closure.reachableFrom]], [[graft.sparql.LocalBgp.Index.build]] and
   * [[graft.operators.Dedup.connectedComponents]] — collect such a
   * relation once and answer in-process, and keep their distributed plans
-  * for anything larger. This object owns that one decision.
+  * for anything larger. [[graft.operators.AnnIndex.queryIvfPqIndex]]
+  * does the same for a small IVF-PQ index: it counts the quantizer's and
+  * the probed lists' rows from their parquet footers, and ships and
+  * scores them on the driver when they fit. This object owns that one
+  * decision.
   */
 object DriverSide {
 
@@ -47,5 +51,12 @@ object DriverSide {
     * an exchange, that next job reads its shuffle output instead of
     * re-running the stages before it, and nothing is pinned. */
   private[graft] def collect[T](rel: RDD[T]): Option[Array[T]] =
-    if (rel.count() <= inputLimit) Some(rel.collect()) else None
+    if (fits(rel.count())) Some(rel.collect()) else None
+
+  /** Whether `rows` input rows, counted without shipping them, may be
+    * collected to the driver. */
+  private[graft] def fits(rows: Long): Boolean = rows <= inputLimit
+
+  /** Whether a driver-side evaluation may produce (or visit) `rows`. */
+  private[graft] def fitsOutput(rows: Long): Boolean = rows <= outputLimit
 }

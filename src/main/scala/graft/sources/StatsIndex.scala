@@ -46,7 +46,8 @@ object StatsIndex {
     *
     *   - discovery is a recursive FILE LISTING (the same metadata-only
     *     operation Spark's InMemoryFileIndex performs at every
-    *     DataFrame creation over `root` — no data is read);
+    *     DataFrame creation over `root` — no data is read), walked on
+    *     the raw filesystem ([[ParquetFiles.walk]]);
     *   - NEW fragments (listed but absent from the stats table) are
     *     scanned — only them, via an explicit path list with `basePath`
     *     so the hive partition columns survive — and their stats rows
@@ -96,9 +97,7 @@ object StatsIndex {
       return build(spark, root, statsPath)
     // (normalized identity, raw Spark-readable path) per current fragment
     val current = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val it = fs.listFiles(rootPath, true)
-    while (it.hasNext) {
-      val f = it.next()
+    ParquetFiles.walk(fs, rootPath).foreach { f =>
       if (f.isFile && f.getPath.getName.endsWith(".parquet"))
         current += ((f.getPath.toUri.getPath, f.getPath.toString))
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{AnnIndex, Dedup, Similarity}
 import graft.plans.{Closure, DriverSide}
 import graft.sparql.LocalBgp
 import org.apache.spark.sql.DataFrame
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one driver-side cutoff ([[DriverSide]]). With a small limit set
-  * through its test seam, each of its four callers takes its distributed
+  * through its test seam, each of its five callers takes its distributed
   * plan over the cutoff (the reference the driver-side answers are
   * property-checked against): its rows equal the driver-side answer, and
   * the relation is ruled out by a count — no
@@ -100,5 +100,27 @@ class DriverSideSpec extends AnyFunSuite {
     assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
     val want = rows(driver)
     assert(rows(cluster) == want && want.size == 40010)
+  }
+
+  test("an IVF-PQ index over the cutoff is served by the Spark plan without collecting its codes") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(7)
+    val vecs = (0 until 20000).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val path = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_driverside_ann_${java.util.UUID.randomUUID()}")
+    val cents = vecs.filter(pmod(col("vec_id"), lit(400)) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    AnnIndex.writeIvfPqIndex(vecs, cents, Similarity.pqCodebook(vecs, m = 2, seedMod = 400),
+      m = 2, dim = 4, path)
+    // every list probed: the driver path ships all 40,000 code rows
+    def serve() = AnnIndex.queryIvfPqIndex(vecs.filter(col("vec_id") < 4), path,
+      m = 2, dim = 4, k = 5, nProbe = 50)
+    val (driver, collected) = onDriver(serve())
+    assert(collected > Bound, s"a collect of the codes shipped at most $collected bytes from one task")
+    val (cluster, shipped) = overCutoff(serve().collect())
+    assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
+    val want = rows(driver)
+    assert(cluster.map(_.toSeq).toSet == want && want.size == 20)
   }
 }

@@ -845,4 +845,29 @@ class RobustnessSpec extends AnyFunSuite {
       use()
     }
   }
+
+  test("IVF-PQ serving fails naming the parameter on a non-positive k, shortK or nProbe") {
+    val s = spark; import s.implicits._
+    val vecs = (0 until 20).map(i => (i.toLong, Array.tabulate(4)(j => (i * 4 + j).toFloat / 80f)))
+      .toDF("vec_id", "embedding")
+    val path = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_robann_${java.util.UUID.randomUUID()}")
+    operators.AnnIndex.writeIvfPqIndex(vecs, vecs.filter(pmod(col("vec_id"), lit(5)) === 0)
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      Similarity.pqCodebook(vecs, m = 2, seedMod = 5), m = 2, dim = 4, path)
+    val qs = vecs.limit(2)
+    def query(k: Int, nProbe: Int) =
+      operators.AnnIndex.queryIvfPqIndex(qs, path, m = 2, dim = 4, k = k, nProbe = nProbe)
+    def admit(shortK: Int, nProbe: Int) = operators.AnnIndex.admitEmbeddingsAgainstIndex(
+      qs, vecs, path, m = 2, dim = 4, shortK = shortK, nProbe = nProbe)
+    Seq[(String, () => Any)](
+      ("k must be positive", () => query(0, 2)), ("k must be positive", () => query(-3, 2)),
+      ("nProbe must be positive", () => query(2, 0)),
+      ("shortK must be positive", () => admit(-1, 2)),
+      ("nProbe must be positive", () => admit(2, -1))).foreach { case (msg, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    assert(query(2, 2).count() > 0)
+  }
 }

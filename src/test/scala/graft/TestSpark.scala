@@ -32,30 +32,41 @@ object TestSpark {
   private val Tag = "graft.test.jobs"
 
   /** `body`'s result, the Spark jobs submitted while it ran and the bytes
-    * each of their tasks returned to the driver. Listener events arrive
-    * asynchronously, in order: a tagged sentinel job seen by the listener
-    * means every earlier job start and task end has been seen too. */
+    * each of their tasks returned to the driver. */
   def sparkWorkDuring[T](body: => T): (T, Int, Seq[Long]) = {
+    val (out, jobs, shipped) = sparkJobsDuring(body)
+    (out, jobs.size, shipped)
+  }
+
+  /** `body`'s result, the name of each Spark job submitted while it ran
+    * (its result stage's call site, `collect at X.scala:12`) and the
+    * bytes each of their tasks returned to the driver. Listener events
+    * arrive asynchronously, in order: a tagged sentinel job seen by the
+    * listener means every earlier job start and task end has been seen
+    * too. */
+  def sparkJobsDuring[T](body: => T): (T, Seq[String], Seq[Long]) = {
     val sc = spark.sparkContext
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val shipped = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).getOrElse(""))
+        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).getOrElse(""),
+          e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("")))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => shipped.add(m.resultSize))
     }
+    def sentinelSeen = jobs.asScala.exists(_._1 == "sentinel")
     sc.addSparkListener(listener)
     try {
       val out = body
       sc.setLocalProperty(Tag, "sentinel")
       try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(5)
-      if (!tags.contains("sentinel"))
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(5)
+      if (!sentinelSeen)
         throw new AssertionError("listener never saw the sentinel job")
       // the sentinel's own one-row count adds a few bytes at most
-      (out, tags.asScala.count(_ != "sentinel"), shipped.asScala.toSeq)
+      (out, jobs.asScala.toSeq.filter(_._1 != "sentinel").map(_._2), shipped.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
