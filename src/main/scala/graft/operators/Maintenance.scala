@@ -47,8 +47,9 @@ import org.apache.spark.sql.functions._
   * [[DedupIndex.describeIndex]] for the ANN branch too — its
   * driver-side recursive listing, then Hadoop's `listFiles`, measured
   * 39 s at 100× (9 000+ files at LocalFS's ~4 ms/file) for a decision
-  * the footer report makes in 0.5 s; the ANN branch now reads only `_graft_meta` (1 row), the
-  * tombstone id count (deletions-sized), the distributed per-dir file
+  * the footer report makes in 0.5 s; the ANN branch now reads only
+  * `_graft_meta` (1 row), the tombstone id count (deletions-sized), the
+  * distributed per-dir file
   * count ([[AnnIndex.codesDataFileCount]]) and the raw-thrift footer
   * balance report — the driver never lists files, only partition dirs.
   * Dedup-family roots keep the describe read (single-relation roots;
