@@ -6,40 +6,59 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Row-local MinHash core shared by the Catalyst kernels below and the
-  * streaming path ([[graft.streaming.StreamingOps.bandKeysOf]]): plain
-  * Scala over String tokens, producing values BIT-IDENTICAL to the batch
-  * xxhash64 pipeline — so streaming candidate state and batch LSH output
-  * live in the same hash space and can be joined/compared directly. */
+/** Row-local MinHash core: the one copy of the shingle hashing, called by
+  * the Catalyst kernels below (interpreted and generated code alike), the
+  * streaming path ([[graft.streaming.StreamingOps.bandKeysOf]]) and the
+  * driver-side near-dup verifier ([[graft.operators.AdmitOnDriver]]).
+  * Values are BIT-IDENTICAL to the batch xxhash64 pipeline
+  * (`Dedup.shingleHashes`), so streaming candidate state, driver-side
+  * shingle sets and batch LSH output live in one hash space. */
 object MinHash {
   import org.apache.spark.unsafe.types.UTF8String
 
-  /** Signature of a token sequence: k salted minima over
-    * `shingleN`-gram shingle hashes; same composition as
-    * `Dedup.minhashSignatures`. Empty input → null. */
-  def signature(toks: Array[String], k: Int, shingleN: Int): Array[Long] = {
-    val m = toks.length
-    if (m == 0) return null
-    val th = new Array[Long](m)
-    var p = 0
-    while (p < m) {
-      th(p) = if (toks(p) == null) 0L
-        else XXH64.hashUTF8String(UTF8String.fromString(toks(p)), 42L)
-      p += 1
+  /** Each token's `xxhash64` (seed 42); a null token hashes to 0. */
+  def tokenHashes(toks: ArrayData): Array[Long] =
+    Array.tabulate(toks.numElements()) { p =>
+      if (toks.isNullAt(p)) 0L else XXH64.hashUTF8String(toks.getUTF8String(p), 42L)
     }
-    val sig = Array.fill(k)(Long.MaxValue)
-    val last = if (m >= shingleN) m - shingleN else 0
-    p = 0
-    while (p <= last) {
+
+  def tokenHashes(toks: Array[String]): Array[Long] =
+    toks.map(t => if (t == null) 0L else XXH64.hashUTF8String(UTF8String.fromString(t), 42L))
+
+  /** The `shingleN`-gram shingle hashes of a document whose tokens hash
+    * to `th`, in position order: each shingle is the `hashLong` fold of
+    * its token hashes from seed 42, as `xxhash64(h0, …, hn-1)` evaluates
+    * it. A document shorter than `shingleN` tokens has one shingle, its
+    * missing positions hashed as 0; an empty one has none. */
+  def shingleHashes(th: Array[Long], shingleN: Int): Array[Long] = {
+    val m = th.length
+    if (m == 0) return Array.emptyLongArray
+    val out = new Array[Long](if (m >= shingleN) m - shingleN + 1 else 1)
+    var p = 0
+    while (p < out.length) {
       var h = 42L
       var j = 0
       while (j < shingleN) {
         h = XXH64.hashLong(if (p + j < m) th(p + j) else 0L, h)
         j += 1
       }
+      out(p) = h
+      p += 1
+    }
+    out
+  }
+
+  /** k salted minima over shingle hashes — `sig[i] = min over shingles
+    * of xxhash64(shingle, i)`; null when there are no shingles. */
+  def minima(shingles: Array[Long], k: Int): Array[Long] = {
+    if (shingles.isEmpty) return null
+    val sig = Array.fill(k)(Long.MaxValue)
+    var p = 0
+    while (p < shingles.length) {
+      val base = XXH64.hashLong(shingles(p), 42L)
       var i = 0
       while (i < k) {
-        val s = XXH64.hashInt(i, XXH64.hashLong(h, 42L))
+        val s = XXH64.hashInt(i, base)
         if (s < sig(i)) sig(i) = s
         i += 1
       }
@@ -47,6 +66,15 @@ object MinHash {
     }
     sig
   }
+
+  /** Signature of a token sequence: k salted minima over `shingleN`-gram
+    * shingle hashes; same composition as `Dedup.minhashSignatures`.
+    * Empty input → null. */
+  def signature(toks: Array[String], k: Int, shingleN: Int): Array[Long] =
+    minima(shingleHashes(tokenHashes(toks), shingleN), k)
+
+  def signature(toks: ArrayData, k: Int, shingleN: Int): Array[Long] =
+    minima(shingleHashes(tokenHashes(toks), shingleN), k)
 
   /** LSH band keys of a signature; same fold as `Dedup.bandKeys`. */
   def bandKeys(sig: Array[Long], bands: Int): Array[Long] = {
@@ -57,6 +85,16 @@ object MinHash {
       while (i < rows) { h = XXH64.hashLong(sig(j * rows + i), h); i += 1 }
       XXH64.hashInt(j, h)
     }
+  }
+
+  /** A kernel's result as Catalyst array data; null stays null. */
+  def arrayData(v: Array[Long]): ArrayData = if (v == null) null else new GenericArrayData(v)
+
+  /** [[bandKeys]] of a token sequence's [[signature]]; null when it has
+    * no signature. */
+  def bandKeys(toks: ArrayData, k: Int, shingleN: Int, bands: Int): Array[Long] = {
+    val sig = signature(toks, k, shingleN)
+    if (sig == null) null else bandKeys(sig, bands)
   }
 }
 
@@ -101,75 +139,14 @@ case class MinHashSignature(child: Expression, k: Int, shingleN: Int)
         s"got ${other.simpleString}, k=$k, shingleN=$shingleN")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val m = toks.numElements()
-    if (m == 0) return null
-    val th = new Array[Long](m)
-    var p = 0
-    while (p < m) {
-      val t = toks.getUTF8String(p)
-      th(p) = if (t == null) 0L else XXH64.hashUTF8String(t, 42L)
-      p += 1
-    }
-    val sig = Array.fill(k)(Long.MaxValue)
-    val last = if (m >= shingleN) m - shingleN else 0
-    p = 0
-    while (p <= last) {
-      var h = 42L
-      var j = 0
-      while (j < shingleN) {
-        val hj = if (p + j < m) th(p + j) else 0L
-        h = XXH64.hashLong(hj, h)
-        j += 1
-      }
-      var i = 0
-      while (i < k) {
-        val s = XXH64.hashInt(i, XXH64.hashLong(h, 42L))
-        if (s < sig(i)) sig(i) = s
-        i += 1
-      }
-      p += 1
-    }
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHash.arrayData(MinHash.signature(input.asInstanceOf[ArrayData], k, shingleN))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val m = ctx.freshName("m"); val th = ctx.freshName("th")
-      val sig = ctx.freshName("sig"); val p = ctx.freshName("p")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val h = ctx.freshName("h"); val hj = ctx.freshName("hj")
-      val s = ctx.freshName("s"); val t = ctx.freshName("t")
-      val last = ctx.freshName("last")
-      s"""
-         |int $m = $a.numElements();
-         |if ($m == 0) { ${ev.isNull} = true; } else {
-         |  long[] $th = new long[$m];
-         |  for (int $p = 0; $p < $m; $p++) {
-         |    org.apache.spark.unsafe.types.UTF8String $t =
-         |      $a.isNullAt($p) ? null : $a.getUTF8String($p);
-         |    $th[$p] = $t == null ? 0L : $xxh.hashUTF8String($t, 42L);
-         |  }
-         |  long[] $sig = new long[$k];
-         |  java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |  int $last = ($m >= $shingleN) ? ($m - $shingleN) : 0;
-         |  for (int $p = 0; $p <= $last; $p++) {
-         |    long $h = 42L;
-         |    for (int $j = 0; $j < $shingleN; $j++) {
-         |      long $hj = ($p + $j < $m) ? $th[$p + $j] : 0L;
-         |      $h = $xxh.hashLong($hj, $h);
-         |    }
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $s = $xxh.hashInt($i, $xxh.hashLong($h, 42L));
-         |      if ($s < $sig[$i]) $sig[$i] = $s;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.MinHash.arrayData(" +
+        s"graft.functions.MinHash.signature($a, $k, $shingleN));\n" +
+        s"${ev.isNull} = ${ev.value} == null;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -191,8 +168,6 @@ case class MinHashSignature(child: Expression, k: Int, shingleN: Int)
 case class MinHashBandKeys(child: Expression, k: Int, shingleN: Int, bands: Int)
     extends UnaryExpression {
 
-  private def rows: Int = k / bands
-
   override def prettyName: String = "minhash_bands"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
@@ -207,69 +182,14 @@ case class MinHashBandKeys(child: Expression, k: Int, shingleN: Int, bands: Int)
         s"bands=$bands")
   }
 
-  @transient private lazy val sigKernel = MinHashSignature(child, k, shingleN)
-
-  override def nullSafeEval(input: Any): Any = {
-    val sigOrNull = sigKernel.nullSafeEval(input)
-    if (sigOrNull == null) return null
-    val sig = sigOrNull.asInstanceOf[ArrayData]
-    val bk = new Array[Long](bands)
-    var j = 0
-    while (j < bands) {
-      var h = 42L
-      var i = 0
-      while (i < rows) { h = XXH64.hashLong(sig.getLong(j * rows + i), h); i += 1 }
-      bk(j) = XXH64.hashInt(j, h)
-      j += 1
-    }
-    new GenericArrayData(bk)
-  }
+  override def nullSafeEval(input: Any): Any =
+    MinHash.arrayData(MinHash.bandKeys(input.asInstanceOf[ArrayData], k, shingleN, bands))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val m = ctx.freshName("m"); val th = ctx.freshName("th")
-      val sig = ctx.freshName("sig"); val p = ctx.freshName("p")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val h = ctx.freshName("h"); val hj = ctx.freshName("hj")
-      val s = ctx.freshName("s"); val t = ctx.freshName("t")
-      val last = ctx.freshName("last"); val bk = ctx.freshName("bk")
-      val bh = ctx.freshName("bh")
-      s"""
-         |int $m = $a.numElements();
-         |if ($m == 0) { ${ev.isNull} = true; } else {
-         |  long[] $th = new long[$m];
-         |  for (int $p = 0; $p < $m; $p++) {
-         |    org.apache.spark.unsafe.types.UTF8String $t =
-         |      $a.isNullAt($p) ? null : $a.getUTF8String($p);
-         |    $th[$p] = $t == null ? 0L : $xxh.hashUTF8String($t, 42L);
-         |  }
-         |  long[] $sig = new long[$k];
-         |  java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |  int $last = ($m >= $shingleN) ? ($m - $shingleN) : 0;
-         |  for (int $p = 0; $p <= $last; $p++) {
-         |    long $h = 42L;
-         |    for (int $j = 0; $j < $shingleN; $j++) {
-         |      long $hj = ($p + $j < $m) ? $th[$p + $j] : 0L;
-         |      $h = $xxh.hashLong($hj, $h);
-         |    }
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $s = $xxh.hashInt($i, $xxh.hashLong($h, 42L));
-         |      if ($s < $sig[$i]) $sig[$i] = $s;
-         |    }
-         |  }
-         |  long[] $bk = new long[$bands];
-         |  for (int $j = 0; $j < $bands; $j++) {
-         |    long $bh = 42L;
-         |    for (int $i = 0; $i < $rows; $i++) {
-         |      $bh = $xxh.hashLong($sig[$j * $rows + $i], $bh);
-         |    }
-         |    $bk[$j] = $xxh.hashInt($j, $bh);
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($bk);
-         |}
-         |""".stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.MinHash.arrayData(" +
+        s"graft.functions.MinHash.bandKeys($a, $k, $shingleN, $bands));\n" +
+        s"${ev.isNull} = ${ev.value} == null;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PERSISTED dedup / decontamination indexes + incremental batch queries
-  * (round 14) — the operational 100 TB pattern.
+  * — the operational 100 TB pattern.
   *
   * Every corpus-level dedup operator in [[Dedup]]/[[TextOps]] re-derives
   * its candidate structure (gram explodes, minhash signatures) from the
@@ -37,11 +37,25 @@ import org.apache.spark.sql.functions._
   * column scan only (narrow key columns, dictionary-encoded parquet),
   * while every shuffle in the plan carries batch-sized relations. When
   * a batch is too large for one broadcast (a backfill, not a daily
-  * increment), the probes fall back to a shuffle join AUTOMATICALLY
-  * (round 16): past the [[MaxBroadcastBytesKey]] budget the batch-side
-  * relations lose their broadcast hint and the joins shuffle on the key
-  * — memory-bounded at any batch size, byte-identical output (the
+  * increment), the probes fall back to a shuffle join automatically:
+  * past the [[MaxBroadcastBytesKey]] budget the batch-side relations
+  * lose their broadcast hint and the joins shuffle on the key —
+  * memory-bounded at any batch size, byte-identical output (the
   * semantics are join-order independent; spec-asserted differentially).
+  *
+  * Which path answers the two admissions ([[admitAgainstIndex]],
+  * [[admitNearDupAgainstIndex]]): when the batch, the index, the doc
+  * store and their tombstones fit [[graft.plans.DriverSide]]'s one
+  * cutoff — counted from the batch's local rows and the parquet footers
+  * before any row ships — the driver answers ([[AdmitOnDriver]]): it
+  * reads only the index rows the batch's keys select, and for near-dup
+  * only the store rows of the candidates, and decides in-process, in one
+  * (exact) or two (near-dup) Spark jobs with nothing pinned. Over the
+  * cutoff the plans above run unchanged. Nothing is cached between
+  * calls: in a day-2 loop an append lands between every two admits, so
+  * a snapshot keyed by index version would reload on every call, while
+  * reading only the rows the batch selects already keeps a call ∝ the
+  * batch.
   *
   * Index maintenance is append-only: after a batch is deduped and
   * admitted, [[appendToIndex]] appends its keys (parquet append — new
@@ -53,7 +67,7 @@ import org.apache.spark.sql.functions._
 object DedupIndex {
 
   // ------------------------------------------------------------------
-  // Index build metadata (round 15): every parameterized index persists
+  // Index build metadata: every parameterized index persists
   // its builder parameters in a nested one-row parquet
   // (`<path>/_graft_meta` — the underscore prefix makes it invisible to
   // Spark's parquet listing, so the index dir stays a plain relation),
@@ -62,8 +76,9 @@ object DedupIndex {
   // query with the wrong (k, w) produces garbage-recall candidates
   // SILENTLY otherwise (the winnowing guarantee and the LSH S-curve
   // both hold only at the build parameters). [[atomicRewrite]] carries
-  // the meta through its swap. Absent meta (a pre-round-15 index) skips
-  // the check — validation is advisory-on-miss, loud-on-mismatch.
+  // the meta through its swap. Absent meta (an index written before
+  // metas existed) skips the check — validation is advisory-on-miss,
+  // loud-on-mismatch.
   // ------------------------------------------------------------------
 
   /** Session conf key bounding the batch-derived relations the probes
@@ -147,9 +162,8 @@ object DedupIndex {
     import spark.implicits._
     // a sentinel row keeps the relation non-empty for param-less kinds
     // (exact) — the kind column must survive for the kind check. One
-    // file: every index call reads it back file by file (readMeta, ~12
-    // ms a file), and the local rows would otherwise land in one file
-    // per core.
+    // file: every index call reads it back file by file (readMeta), and
+    // the local rows would otherwise land in one file per core.
     ((("_kind", 0) +: params.toSeq.sortBy(_._1))
       .map { case (k, v) => (kind, k, v) })
       .toDF("kind", "param", "value").coalesce(1)
@@ -157,41 +171,39 @@ object DedupIndex {
   }
 
   /** The persisted build metadata at `path`, if any: (kind, params).
-    * Round 17 — the store-fed rebuilds read their geometry from here
-    * instead of trusting the caller to re-supply it.
+    * The store-fed rebuilds read their geometry from here instead of
+    * trusting the caller to re-supply it, and every index call checks its
+    * parameters against it ([[checkMeta]]), so this runs several times per
+    * admitted batch.
     *
-    * Optimization round 18: read DIRECTLY with the parquet-hadoop row
-    * reader on the driver instead of `spark.read.parquet(...).collect()`.
-    * The meta relation is a handful of rows in 1–3 tiny part files, but
-    * the DataFrame path paid a listing + schema inference + plan + a
-    * 1-task Spark job (~100 ms) on EVERY probe/serve/maintenance call —
-    * the same per-call class the round-17 footer reports removed from
-    * the monitors. The direct read is low-single-digit ms and
-    * metadata-bound at any scale; the on-disk format is unchanged. */
+    * Read on the driver with the parquet-hadoop row reader rather than as
+    * a DataFrame, which would pay a listing, a schema inference and a
+    * one-task job on every call. The listing and the reads go through the
+    * raw filesystem ([[graft.sources.ParquetFiles]]), and the reader is
+    * configured without a Hadoop `Configuration`: opening it with one
+    * cost ~6–10 ms a file (codec and option set-up from the full
+    * configuration), with a plain parquet configuration ~0.3 ms. The
+    * on-disk format is unchanged. */
   private[graft] def readMeta(spark: SparkSession,
       path: String): Option[(String, Map[String, Int])] = {
+    import graft.sources.ParquetFiles
     val metaPath = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = metaPath.getFileSystem(conf)
+    val fs = ParquetFiles.raw(metaPath.getFileSystem(spark.sessionState.newHadoopConf()))
     if (!fs.exists(metaPath)) return None
-    val parts = fs.listStatus(metaPath).filter(f => f.isFile && {
-      val n = f.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    })
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
-    parts.foreach { st =>
-      val rdr = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          st.getPath)
-        .withConf(conf).build()
-      try {
-        var g = rdr.read()
-        while (g != null) {
-          rows += ((g.getString("kind", 0), g.getString("param", 0),
-            g.getInteger("value", 0)))
-          g = rdr.read()
-        }
-      } finally rdr.close()
+    val rows = ParquetFiles.dataFiles(fs, metaPath).flatMap { st =>
+      val in = new org.apache.parquet.io.InputFile {
+        def getLength: Long = st.getLen
+        def newStream(): org.apache.parquet.io.SeekableInputStream =
+          org.apache.parquet.hadoop.util.HadoopStreams.wrap(fs.open(st.getPath))
+      }
+      val rdr = new org.apache.parquet.hadoop.ParquetReader.Builder[org.apache.parquet.example.data.Group](
+          in, new org.apache.parquet.conf.PlainParquetConfiguration()) {
+        override protected def getReadSupport() = new org.apache.parquet.hadoop.example.GroupReadSupport()
+      }.build()
+      try Iterator.continually(rdr.read()).takeWhile(_ != null)
+        .map(g => (g.getString("kind", 0), g.getString("param", 0), g.getInteger("value", 0)))
+        .toVector
+      finally rdr.close()
     }
     Some((rows.headOption.map(_._1).getOrElse("unknown"),
       rows.filter(_._2 != "_kind").map(r => r._2 -> r._3).toMap))
@@ -408,9 +420,10 @@ object DedupIndex {
   /** Candidate near-dup pairs between a new batch and the INDEXED
     * corpus: (id_a = batch doc, id_b = corpus doc) sharing ≥ 1 LSH
     * band bucket. Same (k, bands, shingleN) as the index write — the
-    * S-curve tuning notes on q19 apply unchanged. Verify the output
-    * with [[Dedup.ngramJaccard]] over batch ∪ candidate corpus docs
-    * (the verify fetch is ∝ candidates, not corpus).
+    * S-curve tuning notes on q19 apply unchanged; `k`, `bands` and
+    * `shingleN` must be positive, with `bands` dividing `k`. Verify the
+    * output with [[Dedup.ngramJaccard]] over batch ∪ candidate corpus
+    * docs (the verify fetch is ∝ candidates, not corpus).
     *
     * Plan: batch band rows (bands per batch doc) broadcast; the index
     * streams once through the (band, key) probe; only MATCHED index
@@ -418,11 +431,25 @@ object DedupIndex {
   def minhashCandidatesAgainstIndex(
       newDocs: DataFrame, textCol: String, idCol: String, indexPath: String,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3): DataFrame = {
+    requireMinHash(k, bands, shingleN)
+    checkMeta(newDocs.sparkSession, indexPath, "minhash",
+      Map("k" -> k, "bands" -> bands, "shingleN" -> shingleN))
+    minhashCandidatesPlan(newDocs, textCol, idCol, indexPath, k, bands, shingleN,
+      probeHint(newDocs))
+  }
+
+  private def requireMinHash(k: Int, bands: Int, shingleN: Int): Unit = {
+    require(k > 0, s"k must be positive, got $k")
+    require(bands > 0, s"bands must be positive, got $bands")
+    require(shingleN > 0, s"shingleN must be positive, got $shingleN")
+    require(k % bands == 0, s"bands must divide k, got k=$k, bands=$bands")
+  }
+
+  private def minhashCandidatesPlan(
+      newDocs: DataFrame, textCol: String, idCol: String, indexPath: String,
+      k: Int, bands: Int, shingleN: Int, bc: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = newDocs.sparkSession
-    checkMeta(spark, indexPath, "minhash",
-      Map("k" -> k, "bands" -> bands, "shingleN" -> shingleN))
-    val bc = probeHint(newDocs)
     val batchRows = newDocs.select(col(idCol).as("id"),
         Bridge.column(graft.functions.MinHashBandKeys(
           Bridge.expression(TextOps.tokens(col(textCol))), k, shingleN,
@@ -505,54 +532,61 @@ object DedupIndex {
     * `keep_id` = the surviving corpus doc), `dup_batch` (novel key, but
     * an earlier batch doc — smallest id — has the same text; `keep_id` =
     * that doc), or `admitted` (first sight of the key anywhere;
-    * `keep_id` = itself). Admission is decided per batch, so streaming
-    * it per micro-batch with index appends in between gives cross-batch
-    * dedup (see [[graft.streaming.StreamingOps.dedupIngestStream]]).
+    * `keep_id` = itself). Output: (idCol, text_key, status, keep_id).
+    * Admission is decided per batch, so streaming it per micro-batch with
+    * index appends in between gives cross-batch dedup (see
+    * [[graft.streaming.StreamingOps.dedupIngestStream]]).
     *
-    * Plan: same index-streams-once broadcast probe as
-    * [[exactDuplicatesAgainstIndex]]; matched index rows aggregate to
-    * min keep_id per key (append-duplicated index rows stay harmless);
-    * the intra-batch min and the status joins are batch-sized.
+    * Which path answers: when the batch, the index and its tombstones fit
+    * [[graft.plans.DriverSide]]'s cutoff, counted from the batch's local
+    * rows and the index's parquet footers, the driver reads only the
+    * index rows whose key is a batch key and decides in-process
+    * ([[AdmitOnDriver]]): one Spark job, none of them a schema inference.
+    * Otherwise the plan below runs: the same index-streams-once broadcast
+    * probe as [[exactDuplicatesAgainstIndex]]; matched index rows
+    * aggregate to min keep_id per key (append-duplicated index rows stay
+    * harmless); the intra-batch min and the status joins are batch-sized.
     *
-    * Replay safety (round 15): index rows whose keep_id IS one of this
-    * batch's doc ids are ignored — under the contract's globally-unique
-    * doc ids the only way such a row exists is that THIS batch already
-    * appended it (an at-least-once foreachBatch replay that crashed
-    * after the index append), and counting it would flip the replayed
-    * batch's 'admitted' rows to 'dup_corpus'. With the exclusion a
-    * replay recomputes the byte-identical status relation, which is
-    * what lets [[graft.streaming.StreamingOps.dedupIngestStream]] make
-    * its status write idempotent. */
+    * Replay safety: index rows whose keep_id IS one of this batch's doc
+    * ids are ignored — under the contract's globally-unique doc ids the
+    * only way such a row exists is that THIS batch already appended it
+    * (an at-least-once foreachBatch replay that crashed after the index
+    * append), and counting it would flip the replayed batch's 'admitted'
+    * rows to 'dup_corpus'. With the exclusion a replay recomputes the
+    * byte-identical status relation, which is what lets
+    * [[graft.streaming.StreamingOps.dedupIngestStream]] make its status
+    * write idempotent. */
   def admitAgainstIndex(
       newDocs: DataFrame, textCol: String, idCol: String,
       indexPath: String): DataFrame = {
     val spark = newDocs.sparkSession
     checkMeta(spark, indexPath, "exact", Map.empty)
     val bc = probeHint(newDocs)
-    val keys = newDocs.select(col(idCol).as("id"),
-      md5(concat_ws(" ", TextOps.tokens(col(textCol)))).as("text_key"))
-    val corpusDup = dropTombstoned(spark,
-        spark.read.parquet(indexPath), indexPath, "keep_id")
-      .join(bc(keys.select(col("text_key")).distinct()),
-        Seq("text_key"), "leftsemi")
-      .join(bc(keys.select(col("id").as("_bid"))),
-        col("keep_id") === col("_bid"), "left_anti")
-      .groupBy(col("text_key")).agg(min(col("keep_id")).as("_corpus_keep"))
-    val batchMin = keys.groupBy(col("text_key"))
-      .agg(min(col("id")).as("_batch_keep"))
-    keys.join(bc(corpusDup), Seq("text_key"), "left")
-      .join(batchMin, Seq("text_key"))
-      .select(col("id").as(idCol), col("text_key"),
-        when(col("_corpus_keep").isNotNull, lit("dup_corpus"))
-          .when(col("id") =!= col("_batch_keep"), lit("dup_batch"))
-          .otherwise(lit("admitted")).as("status"),
-        coalesce(col("_corpus_keep"), col("_batch_keep")).as("keep_id"))
+    AdmitOnDriver.exact(newDocs, textCol, idCol, indexPath).getOrElse {
+      val keys = newDocs.select(col(idCol).as("id"),
+        md5(concat_ws(" ", TextOps.tokens(col(textCol)))).as("text_key"))
+      val corpusDup = dropTombstoned(spark,
+          spark.read.parquet(indexPath), indexPath, "keep_id")
+        .join(bc(keys.select(col("text_key")).distinct()),
+          Seq("text_key"), "leftsemi")
+        .join(bc(keys.select(col("id").as("_bid"))),
+          col("keep_id") === col("_bid"), "left_anti")
+        .groupBy(col("text_key")).agg(min(col("keep_id")).as("_corpus_keep"))
+      val batchMin = keys.groupBy(col("text_key"))
+        .agg(min(col("id")).as("_batch_keep"))
+      keys.join(bc(corpusDup), Seq("text_key"), "left")
+        .join(batchMin, Seq("text_key"))
+        .select(col("id").as(idCol), col("text_key"),
+          when(col("_corpus_keep").isNotNull, lit("dup_corpus"))
+            .when(col("id") =!= col("_batch_keep"), lit("dup_batch"))
+            .otherwise(lit("admitted")).as("status"),
+          coalesce(col("_corpus_keep"), col("_batch_keep")).as("keep_id"))
+    }
   }
 
   /** Per-doc NEAR-dup admission of a batch against the minhash band
-    * index (round 15 — the missing half of the ingest story: a daily
-    * crawl dedups near-dups, not just exact re-fetches). For every
-    * batch doc: `dup_corpus` (exact `shingleN`-gram Jaccard ≥
+    * index: a daily crawl dedups near-dups, not just exact re-fetches.
+    * For every batch doc: `dup_corpus` (exact `shingleN`-gram Jaccard ≥
     * `thetaBp`/10000 with ≥ 1 INDEXED corpus doc; `keep_id` = the
     * smallest matching corpus id), `dup_batch` (not a corpus dup, but
     * verified ≥ θ against an earlier — smaller-id — batch doc;
@@ -560,87 +594,106 @@ object DedupIndex {
     * OWN status, so a chain d2~d1~corpus marks d1 dup_corpus and d2
     * dup_batch pointing at d1, whose keep chain leads on to the corpus
     * keeper), or `admitted` (`keep_id` = itself). Output: (idCol,
-    * status, keep_id).
+    * status, keep_id). `k`, `bands` and `shingleN` must be positive with
+    * `bands` dividing `k`, and `thetaBp` must lie in [0, 10000].
     *
-    * Candidates come from the LSH probe ([[minhashCandidatesAgainstIndex]]
-    * — index streams once, cost ∝ batch) and are then VERIFIED by exact
-    * n-gram Jaccard, so an LSH false positive can never mark a dup; the
-    * usual LSH recall trade applies to misses (tune k/bands via the
-    * S-curve, q19/q172 notes). Verification needs candidate corpus
-    * TEXTS: the band index stores only ids, so they are fetched from
-    * `docStorePath` — a parquet (idCol, textCol) relation maintained
-    * alongside the index (the ingest stream appends admitted docs to
-    * it) — by a broadcast candidate-id semi-join: fetch ∝ candidates,
-    * never a corpus scan. Intra-batch near-dups are a batch-only LSH
-    * self-join + verify (batch-sized).
+    * Candidates come from the LSH probe (the index streams once, cost ∝
+    * batch) and are then VERIFIED by exact n-gram Jaccard, so an LSH
+    * false positive can never mark a dup; the usual LSH recall trade
+    * applies to misses (tune k/bands via the S-curve, q19/q172 notes).
+    * Verification needs candidate corpus TEXTS: the band index stores
+    * only ids, so they are fetched from `docStorePath` — a parquet
+    * (idCol, textCol) relation maintained alongside the index (the ingest
+    * stream appends admitted docs to it) — by candidate id: fetch ∝
+    * candidates, never a corpus scan. Intra-batch near-dups are a
+    * batch-only LSH self-join + verify (batch-sized).
+    *
+    * Which path answers: when the batch, the band index, the doc store
+    * and their tombstones fit [[graft.plans.DriverSide]]'s cutoff,
+    * counted from the batch's local rows and parquet footers, the driver
+    * reads the band rows whose key is a batch band key, then the store
+    * rows of the candidates, and verifies in-process ([[AdmitOnDriver]]):
+    * two Spark jobs, and no checkpoint blocks left behind. Otherwise the
+    * plan below runs: the broadcast band probe, a broadcast candidate-id
+    * semi-join into the store, and one [[Dedup.ngramJaccard]] over both
+    * pair families.
     *
     * Replay safety mirrors [[admitAgainstIndex]]: candidate corpus ids
     * that are THIS batch's own ids (its earlier appends, seen on an
     * at-least-once replay) are excluded, so a replay recomputes the
     * byte-identical status relation. Duplicate doc-store rows from a
-    * replayed append are harmless — verification dedupes (id, shingle)
-    * pairs. Requires globally-unique doc ids. */
+    * replayed append are harmless: the fetched store rows are distinct
+    * before their shingles are taken. Requires globally-unique doc ids. */
   def admitNearDupAgainstIndex(
       newDocs: DataFrame, textCol: String, idCol: String,
       indexPath: String, docStorePath: String,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       thetaBp: Long = 5000L): DataFrame = {
+    requireMinHash(k, bands, shingleN)
+    require(thetaBp >= 0L && thetaBp <= 10000L, s"thetaBp must be in [0, 10000], got $thetaBp")
     val spark = newDocs.sparkSession
+    checkMeta(spark, indexPath, "minhash",
+      Map("k" -> k, "bands" -> bands, "shingleN" -> shingleN))
     val bc = probeHint(newDocs)
-    val batch = newDocs.select(col(idCol), col(textCol))
-    // candidate (batch, corpus) pairs, own-append ids excluded; the LSH
-    // probe feeds two consumers (text fetch + verify) — materialize once
-    val cands = minhashCandidatesAgainstIndex(newDocs, textCol, idCol,
-        indexPath, k, bands, shingleN)
-      .join(bc(batch.select(col(idCol).as("_bid"))),
-        col("id_b") === col("_bid"), "left_anti")
-      // lazy (round 19): same compute-once reuse, no blocking
-      // construction-time job — see ngramJaccard's note
-      .localCheckpoint(false)
-    // tombstone belt-and-braces: the candidate set already excludes
-    // deleted corpus docs when the BAND INDEX was tombstoned (the
-    // documented takedown pattern tombstones index + store together);
-    // filtering the store fetch too means a store-only tombstone still
-    // suppresses the deleted text before its physical compaction
-    val corpusTexts = dropTombstoned(spark,
-        spark.read.parquet(docStorePath), docStorePath, idCol)
-      .join(bc(cands.select(col("id_b").as(idCol)).distinct()),
-        Seq(idCol), "leftsemi")
-      .select(col(idCol), col(textCol))
-    // intra-batch: LSH self-join over the batch only (id_a < id_b by
-    // construction) — re-oriented (later doc, earlier partner) so BOTH
-    // pair families run through ONE exact-Jaccard verification (one
-    // shingle-set derivation, one intersection join) instead of two;
-    // the `_src` tag rides through ngramJaccard untouched and splits
-    // the verdicts back out. Pair families can't collide: id_b is a
-    // corpus id in one and a batch id in the other, and ids are
-    // globally unique.
-    val intra = Dedup.minhashCandidates(batch, textCol, idCol,
-        k, bands, shingleN)
-      .select(col("id_b").as("id_a"), col("id_a").as("id_b"))
-    val verified = Dedup.ngramJaccard(
-      cands.withColumn("_src", lit("corpus"))
-        .unionByName(intra.withColumn("_src", lit("batch"))),
-      batch.unionByName(corpusTexts), textCol, idCol, shingleN,
-      minThetaBp = Some(thetaBp))
-    // ONE conditional-min aggregate + ONE broadcast join for both keep
-    // families (round 19): the previous two filtered aggregates + two
-    // joins re-derived `verified` twice and cost an extra broadcast
-    // exchange per admit call — min() ignores the other family's nulls,
-    // so the fused form is byte-identical
-    val keeps = verified
-      .groupBy(col("id_a"))
-      .agg(min(when(col("_src") === "corpus", col("id_b"))).as("_corpus_keep"),
-        min(when(col("_src") === "batch", col("id_b"))).as("_batch_keep"))
-      .withColumnRenamed("id_a", "id")
-    batch.select(col(idCol).as("id"))
-      .join(bc(keeps), Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("_corpus_keep").isNotNull, lit("dup_corpus"))
-          .when(col("_batch_keep").isNotNull, lit("dup_batch"))
-          .otherwise(lit("admitted")).as("status"),
-        coalesce(col("_corpus_keep"), col("_batch_keep"), col("id"))
-          .as("keep_id"))
+    AdmitOnDriver.nearDup(newDocs, textCol, idCol, indexPath, docStorePath,
+      k, bands, shingleN, thetaBp).getOrElse {
+      val batch = newDocs.select(col(idCol), col(textCol))
+      // candidate (batch, corpus) pairs, own-append ids excluded; the LSH
+      // probe feeds two consumers (text fetch + verify) — materialize once,
+      // lazily: no blocking job while the plan is built
+      val cands = minhashCandidatesPlan(newDocs, textCol, idCol,
+          indexPath, k, bands, shingleN, bc)
+        .join(bc(batch.select(col(idCol).as("_bid"))),
+          col("id_b") === col("_bid"), "left_anti")
+        .localCheckpoint(false)
+      // tombstone belt-and-braces: the candidate set already excludes
+      // deleted corpus docs when the BAND INDEX was tombstoned (the
+      // documented takedown pattern tombstones index + store together);
+      // filtering the store fetch too means a store-only tombstone still
+      // suppresses the deleted text before its physical compaction. The
+      // fetch is made distinct: a replayed store append repeats rows, and
+      // ngramJaccard takes shingles per id, so a repeated row would
+      // interleave its tokens with its copy's.
+      val corpusTexts = dropTombstoned(spark,
+          spark.read.parquet(docStorePath), docStorePath, idCol)
+        .join(bc(cands.select(col("id_b").as(idCol)).distinct()),
+          Seq(idCol), "leftsemi")
+        .select(col(idCol), col(textCol))
+        .distinct()
+      // intra-batch: LSH self-join over the batch only (id_a < id_b by
+      // construction) — re-oriented (later doc, earlier partner) so BOTH
+      // pair families run through ONE exact-Jaccard verification (one
+      // shingle-set derivation, one intersection join) instead of two;
+      // the `_src` tag rides through ngramJaccard untouched and splits
+      // the verdicts back out. Pair families can't collide: id_b is a
+      // corpus id in one and a batch id in the other, and ids are
+      // globally unique.
+      val intra = Dedup.minhashCandidates(batch, textCol, idCol,
+          k, bands, shingleN)
+        .select(col("id_b").as("id_a"), col("id_a").as("id_b"))
+      val verified = Dedup.ngramJaccard(
+        cands.withColumn("_src", lit("corpus"))
+          .unionByName(intra.withColumn("_src", lit("batch"))),
+        batch.unionByName(corpusTexts), textCol, idCol, shingleN,
+        minThetaBp = Some(thetaBp))
+      // ONE conditional-min aggregate + ONE broadcast join for both keep
+      // families: min() ignores the other family's nulls, so two filtered
+      // aggregates would give the same answer at an extra broadcast
+      // exchange per call
+      val keeps = verified
+        .groupBy(col("id_a"))
+        .agg(min(when(col("_src") === "corpus", col("id_b"))).as("_corpus_keep"),
+          min(when(col("_src") === "batch", col("id_b"))).as("_batch_keep"))
+        .withColumnRenamed("id_a", "id")
+      batch.select(col(idCol).as("id"))
+        .join(bc(keeps), Seq("id"), "left")
+        .select(col("id").as(idCol),
+          when(col("_corpus_keep").isNotNull, lit("dup_corpus"))
+            .when(col("_batch_keep").isNotNull, lit("dup_batch"))
+            .otherwise(lit("admitted")).as("status"),
+          coalesce(col("_corpus_keep"), col("_batch_keep"), col("id"))
+            .as("keep_id"))
+    }
   }
 
   /** Persist the decontamination BLOOM mask of a reference/benchmark

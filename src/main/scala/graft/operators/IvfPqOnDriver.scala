@@ -90,7 +90,7 @@ private[operators] object IvfPqOnDriver {
   private final case class ListDir(batch: Option[Long], cid: Long, files: Seq[FileStatus],
       rows: Long, schema: Option[StructType])
 
-  private def integral(t: DataType): Boolean = t match {
+  private[operators] def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }

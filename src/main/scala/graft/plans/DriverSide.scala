@@ -16,8 +16,12 @@ import scala.util.DynamicVariable
   * for anything larger. [[graft.operators.AnnIndex.queryIvfPqIndex]]
   * does the same for a small IVF-PQ index: it counts the quantizer's and
   * the probed lists' rows from their parquet footers, and ships and
-  * scores them on the driver when they fit. This object owns that one
-  * decision.
+  * scores them on the driver when they fit.
+  * [[graft.operators.DedupIndex.admitAgainstIndex]] and
+  * [[graft.operators.DedupIndex.admitNearDupAgainstIndex]] count the
+  * crawl batch, the index, the doc store and their tombstones the same
+  * way, then read only the index rows the batch's keys select and decide
+  * admission in-process. This object owns that one decision.
   */
 object DriverSide {
 
@@ -44,14 +48,15 @@ object DriverSide {
 
   private[graft] def outputLimit: Long = limits.value.output
 
-  /** The rows of `rel` on the driver when there are at most
-    * [[InputLimit]] of them, else None. A count decides before any row is
-    * shipped, so a relation over the cutoff costs one count; the caller
-    * then hands the same RDD to its distributed plan. When `rel` ends in
-    * an exchange, that next job reads its shuffle output instead of
-    * re-running the stages before it, and nothing is pinned. */
-  private[graft] def collect[T](rel: RDD[T]): Option[Array[T]] =
-    if (fits(rel.count())) Some(rel.collect()) else None
+  /** The rows of `rel` on the driver when they and the `alongside` rows
+    * the caller holds with them number at most [[InputLimit]], else None.
+    * A count decides before any row is shipped, so a relation over the
+    * cutoff costs one count; the caller then hands the same RDD to its
+    * distributed plan. When `rel` ends in an exchange, that next job
+    * reads its shuffle output instead of re-running the stages before
+    * it, and nothing is pinned. */
+  private[graft] def collect[T](rel: RDD[T], alongside: Long = 0L): Option[Array[T]] =
+    if (fits(rel.count() + alongside)) Some(rel.collect()) else None
 
   /** Whether `rows` input rows, counted without shipping them, may be
     * collected to the driver. */

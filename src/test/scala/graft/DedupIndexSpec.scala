@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.plans.DriverSide
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1142,6 +1143,7 @@ class DedupIndexSpec extends AnyFunSuite {
   test("admission fuzz: randomized dup-heavy corpora/batches with random " +
       "keeper tombstones — admitAgainstIndex matches a naive recompute in " +
       "BOTH broadcast and forced-shuffle modes") {
+    // and a third mode: the driver-side answer under the default cutoff
     val s = spark; import s.implicits._
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed * 7919)
@@ -1183,10 +1185,12 @@ class DedupIndexSpec extends AnyFunSuite {
         DedupIndex.admitAgainstIndex(batch, "text", "doc_id", path)
           .collect().map(r => r.getLong(0) ->
             ((r.getString(2), r.getLong(3)))).toMap
-      assert(got() == expected, s"seed $seed broadcast mode")
+      def planned(): Map[Long, (String, Long)] = DriverSide.withLimits(-1L, -1L)(got())
+      assert(planned() == expected, s"seed $seed broadcast mode")
       s.conf.set(DedupIndex.MaxBroadcastBytesKey, "0")
-      try assert(got() == expected, s"seed $seed shuffle mode")
+      try assert(planned() == expected, s"seed $seed shuffle mode")
       finally s.conf.unset(DedupIndex.MaxBroadcastBytesKey)
+      assert(got() == expected, s"seed $seed driver mode")
     }
   }
 
@@ -1260,7 +1264,8 @@ class DedupIndexSpec extends AnyFunSuite {
       k = 64, bands = 16)
     DedupIndex.writeAnchorIndex(corpus, "text", "doc_id", anc, k = 3, w = 4)
     corpus.write.mode("overwrite").parquet(store)
-    def runAll(): (Set[Any], Set[Any], Set[Any], Set[Any]) = (
+    // the plans, not the driver-side answers of the two admissions
+    def runAll(): (Set[Any], Set[Any], Set[Any], Set[Any]) = DriverSide.withLimits(-1L, -1L)((
       DedupIndex.admitAgainstIndex(batch, "text", "doc_id", exact)
         .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)): Any).toSet,
       DedupIndex.minhashCandidatesAgainstIndex(batch, "text", "doc_id", mh,
@@ -1271,7 +1276,7 @@ class DedupIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)): Any).toSet,
       DedupIndex.admitNearDupAgainstIndex(batch, "text", "doc_id", mh,
         store, k = 64, bands = 16).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)): Any).toSet)
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)): Any).toSet))
     val normal = runAll()
     assert(normal._1.nonEmpty && normal._2.nonEmpty && normal._3.nonEmpty)
     val prevThresh = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1282,7 +1287,8 @@ class DedupIndexSpec extends AnyFunSuite {
     try {
       val forced = runAll()
       assert(forced == normal) // join-order independence, byte-identical
-      val plan = DedupIndex.admitAgainstIndex(batch, "text", "doc_id", exact)
+      val plan = DriverSide.withLimits(-1L, -1L)(
+        DedupIndex.admitAgainstIndex(batch, "text", "doc_id", exact))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange") &&
         !plan.contains("BroadcastHashJoin"),
@@ -1321,8 +1327,8 @@ class DedupIndexSpec extends AnyFunSuite {
     s.conf.set(DedupIndex.MaxBroadcastBytesKey, (corpusEst / 10).toString)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def q(b: org.apache.spark.sql.DataFrame) =
-        DedupIndex.admitAgainstIndex(b, "text", "doc_id", exact)
+      def q(b: org.apache.spark.sql.DataFrame) = DriverSide.withLimits(-1L, -1L)(
+        DedupIndex.admitAgainstIndex(b, "text", "doc_id", exact))
       val planRaw = q(rawBatch).queryExecution.executedPlan.toString
       assert(!planRaw.contains("BroadcastHashJoin"),
         s"raw filtered batch should take the shuffle plan:\n$planRaw")

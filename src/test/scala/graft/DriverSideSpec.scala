@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AnnIndex, Dedup, Similarity}
+import graft.operators.{AnnIndex, Dedup, DedupIndex, Similarity}
 import graft.plans.{Closure, DriverSide}
 import graft.sparql.LocalBgp
 import org.apache.spark.sql.DataFrame
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one driver-side cutoff ([[DriverSide]]). With a small limit set
-  * through its test seam, each of its five callers takes its distributed
+  * through its test seam, each of its callers takes its distributed
   * plan over the cutoff (the reference the driver-side answers are
   * property-checked against): its rows equal the driver-side answer, and
   * the relation is ruled out by a count — no
@@ -122,5 +122,39 @@ class DriverSideSpec extends AnyFunSuite {
     assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
     val want = rows(driver)
     assert(cluster.map(_.toSeq).toSet == want && want.size == 20)
+  }
+
+  test("admissions over the cutoff plan through Spark without collecting the index or the store") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(3)
+    def text() = Seq.fill(20)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    val corpus = (0L until 2000L).map(i => (i, text())).toDF("doc_id", "text")
+    // every doc re-fetched under a new id: each matches its index key and
+    // its band rows, and each candidate's text is fetched
+    val batch = corpus.collect().map(r => (r.getLong(0) + 100000L, r.getString(1))).toSeq
+      .toDF("doc_id", "text")
+    val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_driverside_admit_${java.util.UUID.randomUUID()}")
+    DedupIndex.writeExactIndex(corpus, "text", "doc_id", s"$root/exact")
+    DedupIndex.writeMinHashIndex(corpus, "text", "doc_id", s"$root/mh")
+    corpus.write.parquet(s"$root/store")
+    // rows and a bag fingerprint of them: one row ships to the driver
+    def fingerprint(df: DataFrame) =
+      df.agg(count(lit(1)), sum(hash(df.columns.map(col).toSeq: _*).cast("long"))).head().toSeq
+    Seq[() => DataFrame](
+      () => DedupIndex.admitAgainstIndex(batch, "text", "doc_id", s"$root/exact"),
+      () => DedupIndex.admitNearDupAgainstIndex(batch, "text", "doc_id", s"$root/mh",
+        s"$root/store")).foreach { admit =>
+      val (driver, collected) = onDriver(admit())
+      assert(collected > Bound, s"the driver path shipped at most $collected bytes from one task")
+      assert(driver.collect().exists(_.toSeq.contains("dup_corpus")))
+      // the plan's batch-sized relations shuffle instead of broadcasting
+      s.conf.set(DedupIndex.MaxBroadcastBytesKey, "0")
+      try {
+        val (planned, shipped) = overCutoff(fingerprint(admit()))
+        assert(shipped < Bound, s"$shipped result bytes reached the driver from one task")
+        assert(planned == fingerprint(driver) && planned.head == 2000L)
+      } finally s.conf.unset(DedupIndex.MaxBroadcastBytesKey)
+    }
   }
 }

@@ -870,4 +870,35 @@ class RobustnessSpec extends AnyFunSuite {
     }
     assert(query(2, 2).count() > 0)
   }
+
+  test("near-dup admission fails naming the parameter on a bad theta, k, bands or shingleN") {
+    val s = spark; import s.implicits._
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "beta gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    val root = TempDirs.register(s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_robnd_${java.util.UUID.randomUUID()}")
+    operators.DedupIndex.writeMinHashIndex(docs, "text", "doc_id", s"$root/mh")
+    docs.write.parquet(s"$root/store")
+    val batch = Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    def admit(k: Int = 64, bands: Int = 16, shingleN: Int = 3, thetaBp: Long = 5000L) =
+      operators.DedupIndex.admitNearDupAgainstIndex(batch, "text", "doc_id", s"$root/mh",
+        s"$root/store", k, bands, shingleN, thetaBp)
+    def cands(k: Int, bands: Int, shingleN: Int) =
+      operators.DedupIndex.minhashCandidatesAgainstIndex(batch, "text", "doc_id", s"$root/mh",
+        k, bands, shingleN)
+    Seq[(String, () => Any)](
+      ("thetaBp must be in [0, 10000]", () => admit(thetaBp = -1L)),
+      ("thetaBp must be in [0, 10000]", () => admit(thetaBp = 10001L)),
+      ("k must be positive", () => admit(k = 0)),
+      ("bands must be positive", () => admit(bands = -16)),
+      ("shingleN must be positive", () => admit(shingleN = 0)),
+      ("bands must divide k", () => admit(bands = 5)),
+      ("k must be positive", () => cands(-64, 16, 3)),
+      ("bands must divide k", () => cands(64, 6, 3)),
+      ("shingleN must be positive", () => cands(64, 16, -1))).foreach { case (msg, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    assert(admit(thetaBp = 10000L).collect().map(_.getString(1)).toSeq == Seq("dup_corpus"))
+  }
 }
